@@ -3,8 +3,9 @@
 One lazily-built logical plan per sink over a shared parse stage; Catalyst +
 AQE replace the reference's gateway→ingestion→compression→anomaly process
 boundaries entirely (SURVEY §3.1 "Spark rebuild of this path"). Stages commit
-snapshots through the manifest store, so a killed run resumes from the last
-committed stage (``run`` is idempotent per run_id).
+snapshots through the manifest store: ``parsed_turns`` first, then every other
+sink concurrently. A killed or failed run resumes from the sinks it committed
+(``run`` is idempotent per run_id).
 
 In-memory mode (``root=None``) returns the sink DataFrames without writing —
 used by tests, __spark_entry__ and the DuckDB oracle comparisons.
@@ -12,10 +13,15 @@ used by tests, __spark_entry__ and the DuckDB oracle comparisons.
 
 from __future__ import annotations
 
+import logging
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..config import PipelineConfig
 from ..operators import aggregate as agg
@@ -25,50 +31,9 @@ from ..operators.parse import parse_pipeline
 from ..operators.route import DEFAULT_ROUTES, with_route
 from ..sources.manifest import SnapshotStore
 
+log = logging.getLogger(__name__)
+
 PARSED_SORT = ["source", "template_id", "ts"]  # 001_clickhouse_schema.sql:21 sort key
-
-
-def timed_pipeline_stages(spark, transcripts, config=None) -> dict[str, float]:
-    """Per-stage wall times of the flagship pipeline (bench/debug aid).
-
-    Uses the write-then-aggregate shape, NOT an in-memory persist of the wide
-    parsed rows: caching text+map rows in memory costs ~60 s of cache build
-    at any core count at sf0.1 and OOMs the default heap outright at the sf1
-    notch (~48M rows) — the same lesson the production job encodes
-    (plans/job.run commits a parquet snapshot and aggregates from it)."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-    import time as _time
-
-    from ..operators.parse import finalize_parsed, masked_transcripts
-    from ..operators import miner as _miner
-
-    config = config or PipelineConfig()
-    out: dict[str, float] = {}
-
-    def t(name, fn):
-        t0 = _time.time()
-        r = fn()
-        out[name] = round(_time.time() - t0, 2)
-        return r
-
-    masked = masked_transcripts(transcripts, config.drain.max_depth)
-    assignments = _miner.mine_assignments(masked, config).persist()
-    t("mine", lambda: assignments.count())
-    parsed = finalize_parsed(_miner.assign_templates(masked, assignments, config), config)
-    parsed = with_route(enrich_with_lookup(parsed, role_tool_lookup(spark)))
-    tmp = _tempfile.mkdtemp(prefix="logmind_stages_")
-    try:
-        t("parse_finalize_write", lambda: parsed.write.mode("overwrite").parquet(f"{tmp}/parsed"))
-        snap = spark.read.parquet(f"{tmp}/parsed")
-        t("aggregates", lambda: [
-            df.write.format("noop").mode("overwrite").save()
-            for df in _downstream_sinks(snap, config, None).values()
-        ])
-    finally:
-        _shutil.rmtree(tmp, ignore_errors=True)
-        assignments.unpersist()
-    return out
 
 
 @dataclass
@@ -143,21 +108,28 @@ def run(
     result = JobResult(sinks={})
     done = _committed_by_run(store, run_id) if resume else set()
 
-    def commit_stage(name: str, df_fn, sort=None, partition_by=None) -> None:
-        if name in done:
-            result.resumed.append(name)
-            result.sinks[name] = store.read(name)
-            return
-        t0 = time.time()
-        store.commit(
-            df_fn(), name, run_id=run_id, sort_within_partitions=sort, partition_by=partition_by
-        )
-        result.timings[name] = time.time() - t0
-        result.sinks[name] = store.read(name)
+    def commit_stage(name: str, df_fn, sort=None, partition_by=None):
+        """Commit one sink unless this run already did. Returns its commit
+        seconds (None when it resumes) and its committed snapshot."""
+        took = None
+        if name not in done:
+            t0 = time.time()
+            store.commit(
+                df_fn(), name, run_id=run_id, sort_within_partitions=sort, partition_by=partition_by
+            )
+            took = time.time() - t0
+        return took, store.read(name)
 
-    # Stage 1-2: the expensive parse+mine pass, committed once; every
-    # downstream aggregate then reads the committed columnar snapshot instead
-    # of re-scanning the raw input (one big scan total, not one per sink).
+    def record(name: str, took: float | None, committed: DataFrame) -> None:
+        if took is None:
+            result.resumed.append(name)
+        else:
+            result.timings[name] = took
+        result.sinks[name] = committed
+
+    # Step 1: the expensive parse+mine pass, committed alone; every other
+    # sink reads either the committed columnar snapshot (one big scan total,
+    # not one per sink) or the assignments its broadcast join cached.
     parsed_lazy = templates_lazy = None
 
     def build_parse():
@@ -171,17 +143,37 @@ def run(
     # parsed_turns is month-partitioned (001_clickhouse_schema.sql:20
     # PARTITION BY toYYYYMM) so SnapshotStore.expire() can TTL whole month
     # directories without ever rewriting surviving data.
-    commit_stage(
+    record("parsed_turns", *commit_stage(
         "parsed_turns",
         lambda: build_parse()[0].withColumn("month", F.date_format("ts", "yyyy-MM")),
         sort=PARSED_SORT,
         partition_by=["month"],
-    )
-    commit_stage("templates", lambda: build_parse()[1])
+    ))
 
-    parsed_committed = result.sinks["parsed_turns"]
-    for name, df in _downstream_sinks(parsed_committed, config, now).items():
-        commit_stage(name, lambda df=df: df)
+    # Step 2: the other sinks at once, one thread each. Each is a few small
+    # jobs; committed one after another they leave most task slots idle
+    # while the driver waits. Under the FIFO scheduler a job that fills the
+    # slots still runs first, so on a cluster this degrades to serial order.
+    # Targets are wrapped here, on the caller's thread, so its job group,
+    # description and tags carry over to the commit jobs.
+    wave = {"templates": lambda: build_parse()[1]}
+    for name, df in _downstream_sinks(result.sinks["parsed_turns"], config, now).items():
+        wave[name] = lambda df=df: df
+    with ThreadPoolExecutor(max_workers=len(wave)) as pool:
+        futures = {
+            name: pool.submit(inheritable_thread_target(spark)(commit_stage), name, df_fn)
+            for name, df_fn in wave.items()
+        }
+    # Every commit has finished here. The first failure in sink order is
+    # raised and any later ones logged; the sinks that did commit stay
+    # committed, and a re-run with the same run_id resumes them.
+    failed = [(name, f.exception()) for name, f in futures.items() if f.exception()]
+    for name, e in failed[1:]:
+        log.error("commit of sink %s failed as well: %s", name, e)
+    if failed:
+        raise failed[0][1]
+    for name, future in futures.items():
+        record(name, *future.result())
     return result
 
 
@@ -275,16 +267,21 @@ def maintain(
 
 
 def _committed_by_run(store: SnapshotStore, run_id: str) -> set[str]:
+    # A fresh root reads as an empty manifest (explicit schema), so an error
+    # here means unreadable lineage: recompute everything, but say so.
     try:
         m = store.manifest()
-    except Exception:
+        rows = (
+            m.filter((m.run_id == run_id) & (m.partition_id == -1) & (m.status == "committed"))
+            .select("stage", "snapshot")
+            .distinct()
+            .collect()
+        )
+    except (Py4JJavaError, PySparkException) as e:
+        where = getattr(store, "root", None) or store.namespace
+        cause = e.java_exception.toString() if isinstance(e, Py4JJavaError) else e
+        log.warning("manifest of %s is unreadable, recomputing every sink: %s", where, cause)
         return set()
-    rows = (
-        m.filter((m.run_id == run_id) & (m.partition_id == -1) & (m.status == "committed"))
-        .select("stage", "snapshot")
-        .distinct()
-        .collect()
-    )
     # Trust the manifest only when the snapshot's COMMIT marker actually
     # exists — a manifest row without a marker (crash window / partial state)
     # must trigger recompute, never a FileNotFoundError at read time.

@@ -46,6 +46,7 @@ with a real catalog to run the same tests end-to-end.
 
 from __future__ import annotations
 
+import threading
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
@@ -98,6 +99,10 @@ class IcebergStore:
     def __init__(self, spark: SparkSession, namespace: str):
         self.spark = spark
         self.namespace = namespace
+        # plans/job.run commits sinks from several threads; one manifest
+        # append at a time keeps the CREATE TABLE IF NOT EXISTS from racing
+        # and the appends from using up Iceberg's commit retries.
+        self._manifest_lock = threading.Lock()
 
     def _table(self, sink: str) -> str:
         return f"{self.namespace}.{sink}"
@@ -201,9 +206,10 @@ class IcebergStore:
         # from parquet footers.
         total = int(summary.get("added-records", 0))
         committed_at = datetime.now(timezone.utc).replace(tzinfo=None)
-        self._append_manifest(
-            [(run_id, sink, sid, -1, None, total, committed_at, "committed")]
-        )
+        with self._manifest_lock:
+            self._append_manifest(
+                [(run_id, sink, sid, -1, None, total, committed_at, "committed")]
+            )
         return sid
 
     def latest_snapshot(self, sink: str) -> int | None:

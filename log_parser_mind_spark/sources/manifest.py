@@ -52,6 +52,9 @@ class SnapshotStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        # Created here, not lazily, so threads committing through one store
+        # share one cache (see _marker).
+        self._marker_cache: dict[tuple[str, int], dict] = {}
         os.makedirs(os.path.join(root, "_manifest"), exist_ok=True)
 
     # -- commit protocol ----------------------------------------------------
@@ -234,9 +237,7 @@ class SnapshotStore:
         marker non-fatal for scan paths: a concurrent vacuum may rmtree a
         superseded dir between a reader's listdir and its marker open —
         scans must treat that as "snapshot gone", not crash the commit."""
-        cache = getattr(self, "_marker_cache", None)
-        if cache is None:
-            cache = self._marker_cache = {}
+        cache = self._marker_cache
         key = (sink, snapshot)
         if key not in cache:
             try:

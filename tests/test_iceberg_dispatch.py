@@ -123,16 +123,28 @@ class _FakeCatalogStore(iceberg.IcebergStore):
         return self.spark.read.parquet(os.path.join(self._dir(sink), f"snap={sid}"))
 
     def _append_manifest(self, rows):
+        """An optimistic table commit: read the current version, take a
+        catalog round trip, then claim the next version. An append that
+        finds its version already claimed by a concurrent one fails, as
+        Iceberg's does once its commit retries run out."""
         import pandas as pd
 
-        os.makedirs(os.path.join(self.root, "_manifest_tbl"), exist_ok=True)
+        d = os.path.join(self.root, "_manifest_tbl")
+        os.makedirs(d, exist_ok=True)
+        version = len(os.listdir(d))
         pdf = pd.DataFrame(
             rows,
             columns=["run_id", "stage", "snapshot", "partition_id",
                      "rows_in", "rows_out", "committed_at", "status"],
         )
         pdf["committed_at"] = pdf["committed_at"].astype("datetime64[us]")
-        pdf.to_parquet(os.path.join(self.root, "_manifest_tbl", f"{time.time_ns()}.parquet"))
+        time.sleep(0.05)
+        try:
+            fd = os.open(os.path.join(d, f"v{version}.parquet"), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+        except FileExistsError:
+            raise RuntimeError(f"manifest commit conflict at version {version}") from None
+        with os.fdopen(fd, "wb") as fh:
+            pdf.to_parquet(fh)
 
     def _read_manifest(self):
         p = os.path.join(self.root, "_manifest_tbl")
@@ -177,6 +189,14 @@ def test_iceberg_resume_kill_rerun(spark, tmp_path, fake_catalog):
                      now="2024-01-02 00:00:00", namespace="lpm")
     assert set(result.resumed) == {"parsed_turns", "templates"}
 
+    def stage_totals():
+        # The concurrent commits share one manifest table: exactly one
+        # stage-total row per sink, none lost to a racing append.
+        m = store.manifest().filter("run_id = 'r2' and partition_id = -1")
+        return sorted(r.stage for r in m.select("stage").collect())
+
+    assert stage_totals() == sorted(result.sinks)
+
     # Resumed run equals a fresh parquet-backend run, sink for sink.
     fresh = job.run(spark, tr, root=str(tmp_path / "fresh_wh"), run_id="rf",
                     now="2024-01-02 00:00:00")
@@ -199,6 +219,7 @@ def test_iceberg_resume_kill_rerun(spark, tmp_path, fake_catalog):
                       now="2024-01-02 00:00:00", namespace="lpm")
     assert result2.resumed == []
     assert store.read("parsed_turns").count() == n_before  # replaced, not doubled
+    assert stage_totals() == sorted(result2.sinks)
 
 
 def test_iceberg_commit_marker_is_the_snapshot(spark, tmp_path, fake_catalog):

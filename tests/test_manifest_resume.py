@@ -398,3 +398,71 @@ def test_append_style_tag_blocks_keep_last_pruning(spark, transcripts, tmp_path)
     assert store.visible_snapshots("events_epochs") == [sid]
     with pytest.raises(ValueError, match="append_style"):
         store.vacuum("events_epochs", keep_last=1)
+
+
+def test_unreadable_manifest_warns_and_recomputes(spark, tmp_path, caplog):
+    """An unreadable manifest still means a full recompute, but never a
+    silent one: the warning names the root."""
+    root = str(tmp_path / "wh_garbage")
+    store = SnapshotStore(spark, root)
+    with open(os.path.join(root, "_manifest", "manifest-x.parquet"), "wb") as fh:
+        fh.write(b"not a parquet file")
+    with caplog.at_level("WARNING", logger=job.__name__):
+        assert job._committed_by_run(store, "r") == set()
+    assert any(root in r.getMessage() for r in caplog.records if r.levelname == "WARNING")
+
+
+def _jobs_after(spark, first_id):
+    """(job id, job group or None) of every job the status store lists with
+    an id of at least ``first_id``."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    out = []
+    it = jsc.statusStore().jobsList(None).iterator()
+    while it.hasNext():
+        j = it.next()
+        if j.jobId() >= first_id:
+            g = j.jobGroup()
+            out.append((j.jobId(), g.get() if g.isDefined() else None))
+    return out
+
+
+def test_concurrent_commits_contract(spark, transcripts, tmp_path, monkeypatch):
+    """The sinks after parsed_turns commit concurrently. Their jobs carry the
+    caller's job group; one failing sink fails the run but leaves every
+    other sink committed, and a re-run with the same run_id resumes them
+    and lists the sinks in the serial order."""
+    from pyspark.sql import functions as F
+
+    now = "2024-01-02 00:00:00"
+    root = str(tmp_path / "wh_wave")
+    downstream = job._downstream_sinks
+
+    def with_failing_sink(parsed, config, now_):
+        # First in order, so a serial commit would stop before the others.
+        broken = parsed.select(F.raise_error(F.lit("broken sink")).alias("x"))
+        return {"broken": broken, **downstream(parsed, config, now_)}
+
+    monkeypatch.setattr(job, "_downstream_sinks", with_failing_sink)
+    sc = spark.sparkContext
+    first_id = 1 + max((j for j, _ in _jobs_after(spark, 0)), default=-1)
+    sc.setJobGroup("commit_wave", "concurrent commit contract")
+    try:
+        with pytest.raises(Exception, match="broken sink"):
+            job.run(spark, transcripts, root=root, run_id="rw", now=now)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = _jobs_after(spark, first_id)
+    assert jobs and {g for _, g in jobs} == {"commit_wave"}, jobs
+
+    store = SnapshotStore(spark, root)
+    expected = ["parsed_turns", "templates",
+                *downstream(store.read("parsed_turns"), PipelineConfig(), now)]
+    assert [s for s in expected if not store.committed_snapshots(s)] == []
+    assert store.committed_snapshots("broken") == []
+
+    monkeypatch.setattr(job, "_downstream_sinks", downstream)
+    result = job.run(spark, transcripts, root=root, run_id="rw", now=now)
+    assert list(result.sinks) == expected
+    assert result.resumed == expected and result.timings == {}
