@@ -12,20 +12,79 @@ analysis in BENCH/BASELINE.md).
 Interleaved repeats with min-take (noisy-neighbor VM); appends a section to
 BENCH/BASELINE.md.
 
-Usage: python bench/scaling_cluster.py [n_convs] [repeats]
+Usage: python bench/scaling_cluster.py [n_convs] [repeats] [cores] [mem_mb] [codec]
 """
 
 from __future__ import annotations
 
+import json
 import os
+import subprocess
 import sys
+import zipfile
 from datetime import datetime, timezone
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.join(REPO, "bench"))
 
-from scaling import build_zip, prepare_input, run_at  # noqa: E402
+
+def build_zip(path: str) -> None:
+    pkg = os.path.join(REPO, "log_parser_mind_spark")
+    with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as zf:
+        for root, _dirs, files in os.walk(pkg):
+            for f in files:
+                if f.endswith(".py"):
+                    full = os.path.join(root, f)
+                    zf.write(full, os.path.relpath(full, REPO))
+
+
+def prepare_input(n_convs: int) -> tuple[str, int]:
+    from log_parser_mind_spark.session import get_spark
+    from log_parser_mind_spark.synth import synth_transcripts
+
+    out = os.path.join(REPO, "data", f"scaling_input_{n_convs}.parquet")
+    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+        spark = get_spark(app_name="scaling_prepare", master=f"local[{os.cpu_count() or 1}]")
+        df = synth_transcripts(spark, n_convs=n_convs, seed=42).repartition(128)
+        df.write.mode("overwrite").parquet(out)
+        n = spark.read.parquet(out).count()
+        spark.stop()
+    else:
+        import duckdb
+
+        n = duckdb.sql(f"SELECT count(*) FROM '{out}/*.parquet'").fetchone()[0]
+    return out, n
+
+
+def run_at(
+    master: str,
+    zip_path: str,
+    input_path: str,
+    n_partitions: int,
+    codec: str,
+) -> dict:
+    cmd = [
+        "spark-submit",
+        "--master", master,
+        "--conf", "spark.ui.enabled=false",
+        "--conf", "spark.ui.showConsoleProgress=false",
+        "--conf", "spark.sql.session.timeZone=UTC",
+        "--conf", "spark.sql.adaptive.enabled=true",
+        "--conf", "spark.driver.memory=16g",
+        "--conf", f"spark.io.compression.codec={codec}",
+        "--conf", f"spark.sql.parquet.compression.codec={codec}",
+        "--py-files", zip_path,
+        os.path.join(REPO, "bench", "submit_job.py"),
+        input_path,
+        str(n_partitions),
+    ]
+    proc = subprocess.run(cmd, capture_output=True, text=True, timeout=1800)
+    for line in proc.stdout.splitlines():
+        line = line.strip()
+        if line.startswith("{"):
+            return json.loads(line)
+    raise RuntimeError(f"no JSON from {master}:\n{proc.stdout[-2000:]}\n{proc.stderr[-2000:]}")
+
 
 def masters(cores: int, mem_mb: int) -> dict[str, str]:
     return {

@@ -79,12 +79,3 @@ class PipelineConfig:
     drain: DrainConfig = field(default_factory=DrainConfig)
     redactor: RedactorConfig = field(default_factory=RedactorConfig)
     anomaly: AnomalyConfig = field(default_factory=AnomalyConfig)
-    # Shuffle parallelism for the signature aggregation; None → session default.
-    shuffle_partitions: int | None = None
-    # Broadcast the sig→template assignment table back onto rows. True/None →
-    # broadcast hint (the map is one row per distinct signature — small by
-    # design; without the hint Spark sort-merge-joins past the 10 MB auto
-    # threshold and shuffles the whole fact table). False → let AQE decide,
-    # for pathological corpora where distinct signatures rival row count.
-    broadcast_assignments: bool | None = None
-    collect_samples: bool = False  # reference never populates SampleLogs (drain.go:290 + no append)

@@ -512,20 +512,17 @@ def assign_templates(
 
     Left join keeps empty-text rows (the reference's Parse errors on them,
     cmd/ingestion drops the message; we keep the row with a null template so
-    per-turn text equality still holds end-to-end).
+    per-turn text equality still holds end-to-end). ``config`` is accepted
+    for symmetry with the other stages; no field of it applies here.
     """
-    config = config or PipelineConfig()
     amap = assignments.select(
         "masked_sig", "template_id", "template", "creates", "first_conv", "first_turn"
     )
-    if config.broadcast_assignments in (True, None):
-        # Default: broadcast. The map is one row per distinct signature —
-        # small by design — and without the hint Spark falls back to a
-        # sort-merge join past the 10 MB auto threshold, shuffling the whole
-        # fact table on string keys (measured as the write stage's dominant
-        # cost). Set broadcast_assignments=False only for pathological
-        # corpora where distinct signatures rival row count.
-        amap = F.broadcast(amap)
+    # Broadcast: the map is one row per distinct signature — small by
+    # design — and without the hint Spark falls back to a sort-merge join
+    # past the 10 MB auto threshold, shuffling the whole fact table on
+    # string keys (measured as the write stage's dominant cost).
+    amap = F.broadcast(amap)
     # Join on the signature STRING, not its 64-bit hash: the map side is tiny
     # and broadcast, so the wider key costs little, and at 10^12-turn scale a
     # birthday collision between two distinct signatures' xxhash64 would

@@ -183,7 +183,8 @@ def bucket_stats(bucketed: DataFrame, cols: list[str]) -> DataFrame:
     (n_buckets, max_bucket, sum_sq). ``sum_sq`` is the bucketed join's row
     output; ``max_bucket`` is its skew ceiling. Run this at a scale notch
     whenever plane/band counts change — it is the evidence that the bucketing
-    actually bounds the join (bench/bucket_stats_bench.py records it)."""
+    actually bounds the join (recorded by bench/bucket_stats_bench.py, removed;
+    the script is at git revision 30665da)."""
     sizes = bucketed.groupBy(*cols).agg(F.count(F.lit(1)).alias("n"))
     return sizes.agg(
         F.count(F.lit(1)).alias("n_buckets"),

@@ -8,9 +8,13 @@ boundary, and shuffle parallelism sized to cores instead of the 200 default.
 
 from __future__ import annotations
 
+import logging
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 
 def get_spark(
@@ -62,9 +66,12 @@ def get_spark(
             builder = builder.config(k.strip(), v.strip())
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
+    # getOrCreate on a live context returns it with its worker pool already
+    # warm; only a context built here pays the first-stage fork.
+    new_context = SparkContext._active_spark_context is None
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if prewarm_python_workers and os.environ.get("SPARK_GRAFT_PREWARM", "1") != "0":
+    if prewarm_python_workers and new_context:
         _prewarm_python_workers(spark)
     return spark
 
@@ -79,7 +86,7 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
     (`spark.python.worker.reuse`, default on) keeps the warmed pool alive
     for every later Python stage. This touches no data and computes nothing
     query-specific — it is pool warmup, the same work the first query would
-    do, moved to session build. Disable with SPARK_GRAFT_PREWARM=0."""
+    do, moved to session build. Disable with get_spark(prewarm_python_workers=False)."""
 
     def warm(batches):
         try:  # the package import is best-effort: a worker whose path
@@ -99,5 +106,7 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
             .mode("overwrite")
             .save()
         )
-    except Exception:
-        pass  # warmup must never break session creation
+    except Exception as e:  # warmup must never break session creation
+        log.warning(
+            "python worker prewarm failed, first Python stage pays the fork: %r", e, exc_info=True
+        )

@@ -41,6 +41,8 @@ def test_stratified_fractions_track_targets(spark):
     rows = [(i, "en" if i % 2 == 0 else "de") for i in range(20_000)]
     docs = spark.createDataFrame(rows, "doc_id long, lang string")
     out = sm.stratified_sample(docs, {"en": 0.2, "de": 0.8}, strata_col="lang", salt=1)
+    plan = out._sc._jvm.PythonSQLUtils.explainString(out._jdf.queryExecution(), "formatted")
+    assert "Exchange" not in plan  # a pure per-row filter, no shuffle
     got = {r.lang: r.n for r in out.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()}
     assert 0.17 < got["en"] / 10_000 < 0.23
     assert 0.77 < got["de"] / 10_000 < 0.83
