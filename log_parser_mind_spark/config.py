@@ -18,24 +18,27 @@ WILDCARD = "<*>"
 class DrainConfig:
     """Drain template-mining knobs (reference drain.go:66-74 defaults).
 
-    ``max_children`` / ``max_clusters`` are carried for parity but — exactly
-    like the reference, which stores and never enforces them
-    (drain.go:313-342 has no cap check) — they do not limit tree growth.
+    ``max_depth`` and ``sim_threshold`` drive both the literal port
+    (drain_core.DrainTree) and the distributed miner. ``max_children`` /
+    ``max_clusters`` are carried for parity: DrainTree stores them and —
+    exactly like the reference (drain.go:313-342 has no cap check) — never
+    limits tree growth with them. The reference's ``MaxSampleLogs`` has no
+    field: its SampleLogs are never populated (drain.go:290).
+    ``giant_leaf_threshold`` is the distributed miner's scale guard.
     """
 
     max_depth: int = 4
     sim_threshold: float = 0.5
     max_children: int = 100
     max_clusters: int = 20
-    max_sample_logs: int = 5
     # Scale guard (no reference analog — the reference's global-mutex tree
     # simply degrades): a tree leaf whose DISTINCT-signature count exceeds
     # this cap is mined on a deterministic hash-sample of ~this many sigs;
     # the tail is assigned JVM-side against the mined templates (broadcast +
     # zip_with similarity), with singleton fallback for unmatched sigs.
     # Keeps the sequential Python clustering task bounded at O(cap·clusters)
-    # regardless of corpus cardinality. None → unbounded (exact legacy path).
-    giant_leaf_threshold: int | None = 100_000
+    # regardless of corpus cardinality.
+    giant_leaf_threshold: int = 100_000
 
 
 @dataclass(frozen=True)

@@ -87,23 +87,3 @@ def masked_tokens_expr(tokens: Column) -> Column:
 def masked_sig_expr(masked_tokens: Column) -> Column:
     """Join masked tokens to the canonical signature string (drain.go:308-310)."""
     return F.array_join(masked_tokens, " ")
-
-
-def leaf_key_exprs(masked_tokens: Column, max_depth: int = 4) -> list[Column]:
-    """Drain tree leaf coordinates: (token_count, key tokens at depths 2..max_depth-1).
-
-    Mirrors treeSearch/addToTree (drain.go:209-341): level 1 keys on token
-    count (``len_N``), levels 2..max_depth-1 key on masked token[i-2], and the
-    leaf holds the similarity-matched clusters. A log with fewer tokens than
-    the key depth stops early (drain.go:314,326-329), which the null key
-    encodes naturally.
-    """
-    n = F.size(masked_tokens)
-    keys: list[Column] = [n.alias("n_tokens")]
-    # Tree levels 2..max_depth-1 consume tokens[0..max_depth-3]: addToTree
-    # appends the cluster once depth >= max_depth or depth > len(tokens).
-    for i in range(max_depth - 2):
-        keys.append(
-            F.when(n > F.lit(i + 1), F.element_at(masked_tokens, i + 1)).alias(f"k{i}")
-        )
-    return keys

@@ -3,7 +3,9 @@
 Native-expression port of internal/compression/pii/redactor.go:
   - pattern set + placeholders ← redactor.go:39-89
   - Redact (full replace)      ← redactor.go:92-107
-  - RedactVariables            ← redactor.go:110-121 (map values)
+  - RedactVariables            ← redactor.go:110-121: ``redact_value_expr``
+                                 per variable value, applied by
+                                 parse.finalize_parsed
   - DetectPII                  ← redactor.go:139-149
   - Mask / MaskEmail           ← redactor.go:153-179
 
@@ -80,13 +82,6 @@ def redact_value_expr(value: Column, config: RedactorConfig | None = None) -> Co
         return value
     combined = "|".join(f"(?:{p})" for _, p, _ in pats)
     return F.when(value.rlike(combined), redact_expr(value, config)).otherwise(value)
-
-
-def redact_map_values_expr(variables: Column, config: RedactorConfig | None = None) -> Column:
-    """RedactVariables (redactor.go:110-121) over a Map<String,String> column."""
-    if not active_patterns(config):
-        return variables
-    return F.transform_values(variables, lambda _k, v: redact_value_expr(v, config))
 
 
 def detect_pii_expr(text: Column, config: RedactorConfig | None = None) -> Column:

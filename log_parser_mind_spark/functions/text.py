@@ -106,10 +106,6 @@ def quality_score_from(tokens: Column, text: Column) -> Column:
 # -- text-column convenience wrappers (one-off use, NOT the 100 TB pass) -----
 
 
-def stopword_hits_expr(text: Column, lang: str) -> Column:
-    return stopword_hits_from(lower_tokens(text), lang)
-
-
 def lang_id_expr(text: Column, min_hits: int = 1) -> Column:
     """Convenience wrapper — inlines one split per language; use
     ``with_tokens`` + ``lang_id_from`` in pipelines."""

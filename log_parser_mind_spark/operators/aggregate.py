@@ -13,19 +13,14 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from .route import severity_class_expr
 
 
-def global_stats(parsed: DataFrame, exact_distinct: bool = True) -> DataFrame:
+def global_stats(parsed: DataFrame) -> DataFrame:
     """A1 — GetStats (internal/storage/clickhouse/client.go:273-300):
     count, uniq(template_id), Σ original, Σ compressed, derived ratio.
-    ClickHouse ``uniq`` is approximate → ``approx_count_distinct`` is the
-    faithful mapping; exact mode is for oracle equality."""
-    uniq = (
-        F.countDistinct("template_id")
-        if exact_distinct
-        else F.approx_count_distinct("template_id")
-    )
+    ClickHouse ``uniq`` is approximate; the distinct count here is exact,
+    which is what oracle equality needs."""
     return parsed.agg(
         F.count(F.lit(1)).alias("total_logs"),
-        uniq.alias("unique_templates"),
+        F.countDistinct("template_id").alias("unique_templates"),
         F.sum("original_size").cast("long").alias("total_original_size"),
         F.sum("compressed_size").cast("long").alias("total_compressed_size"),
     ).select(
@@ -73,15 +68,6 @@ def top_templates(parsed: DataFrame, k: int = 10) -> DataFrame:
     )
 
 
-def per_source_rollup(hourly: DataFrame) -> DataFrame:
-    """A5 — second-stage rollup of the hourly MV (001_clickhouse_schema.sql:66)."""
-    return hourly.groupBy("source").agg(
-        F.sum("log_count").alias("total_logs"),
-        F.sum("total_original_size").alias("total_original_size"),
-        F.sum("total_compressed_size").alias("total_compressed_size"),
-    )
-
-
 def template_stats(templates: DataFrame) -> DataFrame:
     """A6 — drain.GetStats (drain.go:419-438): cluster count, Σ size, avg."""
     return templates.agg(
@@ -122,16 +108,6 @@ def recent_window(
         series.filter(F.col("ts") > F.expr(f"timestamp'{now}' - interval {window_minutes} minutes"))
         .groupBy(key)
         .agg(fn.alias("recent"))
-    )
-
-
-def conditional_stats(df: DataFrame, flag: str = "success", value: str = "confidence") -> DataFrame:
-    """A10/A11 — COUNT(*) FILTER (WHERE success), AVG(...) FILTER
-    (internal/storage/postgres/client.go:342-372)."""
-    return df.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.count(F.when(F.col(flag), 1)).alias("successes"),
-        F.avg(F.when(F.col(flag), F.col(value))).alias("avg_success_value"),
     )
 
 

@@ -56,20 +56,6 @@ def shingles_expr(text_col, n: int = 3):
     return F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " "))
 
 
-def _seeded_hash(seed: int):
-    # Single-arg lambda on purpose: a two-arg lambda would make F.transform
-    # bind the second parameter to the ARRAY INDEX, silently replacing the seed.
-    return lambda s: F.xxhash64(F.lit(seed), s)
-
-
-def minhash_signature_expr(shingles, k: int = 32):
-    """k minhash values: min over shingles of xxhash64(seed_i, shingle).
-    Pure JVM expressions — no Python in the 100 TB pass."""
-    return F.array(
-        *[F.array_min(F.transform(shingles, _seeded_hash(i))) for i in range(k)]
-    )
-
-
 def minhash_banded(
     docs: DataFrame,
     id_col: str = "doc_id",

@@ -1,31 +1,31 @@
-"""Drain template mining — pure-Python core shared by the distributed miner
-UDF and the single-threaded oracle.
+"""Drain template mining — the pure-Python core: the literal reference port
+plus the scalar helpers (tokenize, mask, variables, FNV template ids) that
+the distributed miner, the pandas oracle and the tests share.
 
-Two implementations live here:
+``DrainTree`` is a literal, row-at-a-time port of the reference algorithm
+(internal/compression/drain/drain.go), the reference behaviour the unit
+tests ported from drain_test.go pin. Order-SENSITIVE, exactly like the
+reference.
 
-1. ``DrainTree`` — a literal, row-at-a-time port of the reference algorithm
-   (internal/compression/drain/drain.go). Used by the unit tests (ported from
-   drain_test.go) and by the pandas oracle that defines expected pipeline
-   output. Order-SENSITIVE, exactly like the reference.
+The distributed miner does not run ``DrainTree``. It runs the canonical,
+order-FREE per-leaf loop ``miner.cluster_leaf`` (SURVEY §4.3.1) over
+*distinct masked signatures* per tree-leaf group, in the deterministic order
+of their first occurrence ``(conv_id, turn_idx)``. Its template IDs are
+minted here (``template_id_of``) from the FINAL generalized template string,
+so an ID is a pure function of its template — reproducible at any
+parallelism.
 
-2. ``cluster_signatures`` — the canonical, order-FREE variant the distributed
-   miner runs (SURVEY §4.3.1). It clusters *distinct masked signatures*
-   (weighted by row count) per tree-leaf group, processing them in the
-   deterministic order of their first occurrence ``(conv_id, turn_idx)``.
-   Template IDs are minted from the FINAL generalized template string, so the
-   ID is a pure function of the template — reproducible at any parallelism.
-
-Known, intentional divergences from the literal reference (documented per
-SURVEY §7.5):
+Known, intentional divergences of the canonical loop from the literal
+reference (documented per SURVEY §7.5):
   - The reference mints the cluster ID from the FIRST log's masked tokens at
     creation time and never re-hashes after generalization (drain.go:279-305);
-    the canonical variant hashes the final template.
+    the canonical loop hashes the final template.
   - The reference's wildcard tree-descent fallback (drain.go:233-237) lets a
     log with a concrete token match a cluster whose key token was masked; the
-    canonical variant groups strictly by masked leaf coordinates. Both
-    variants agree whenever masking is consistent across occurrences of a
-    pattern — which is the case by construction, since masking is a pure
-    function of the token.
+    canonical loop groups strictly by masked leaf coordinates. Both agree
+    whenever masking is consistent across occurrences of a pattern — which
+    is the case by construction, since masking is a pure function of the
+    token.
 """
 
 from __future__ import annotations
@@ -142,7 +142,7 @@ def extract_variables(template: str, log_content: str) -> dict[str, str]:
 
 
 # ---------------------------------------------------------------------------
-# 1. Literal port — order-sensitive, used as the oracle / for unit parity.
+# Literal port — order-sensitive, pinned by the ported reference unit tests.
 # ---------------------------------------------------------------------------
 
 
@@ -298,96 +298,9 @@ class DrainTree:
         }
 
 
-# ---------------------------------------------------------------------------
-# 2. Canonical order-free clusterer over distinct signatures (distributed).
-# ---------------------------------------------------------------------------
-
-
-@dataclass
-class SigInput:
-    """One distinct masked signature within a tree-leaf group."""
-
-    sig: str
-    weight: int
-    first_conv: str
-    first_turn: int
-
-
-@dataclass
-class SigAssignment:
-    sig: str
-    template_id: str
-    template: str
-    creates: bool  # True iff this signature's first row created its cluster
-
-
-def cluster_signatures(sigs: list[SigInput], sim_threshold: float = 0.5) -> list[SigAssignment]:
-    """Cluster distinct masked signatures of ONE tree-leaf group.
-
-    Signatures are processed in canonical first-occurrence order
-    ``(first_conv, first_turn)`` — the same (conv_id, turn_idx) arrival order
-    the oracle replays — running the reference leaf-level loop
-    (findBestMatch ≥ sim_threshold → generalize, else create;
-    drain.go:243-276,345-363) with each distinct signature standing in for
-    its whole row group. Clusters whose generalized templates converge to the
-    same string are merged, and the template ID is minted from the final
-    template string, so output is invariant to partitioning.
-    """
-    order = sorted(range(len(sigs)), key=lambda i: (sigs[i].first_conv, sigs[i].first_turn))
-    clusters: list[dict] = []  # {"tokens": [...], "members": [sig indices], "anchor": idx}
-    for i in order:
-        tokens = sigs[i].sig.split(" ") if sigs[i].sig else []
-        best, best_sim = None, 0.0
-        for c in clusters:
-            if len(c["tokens"]) != len(tokens):
-                continue
-            sim = similarity(c["tokens"], tokens)
-            if sim > best_sim and sim >= sim_threshold:
-                best_sim = sim
-                best = c
-        if best is None:
-            clusters.append({"tokens": list(tokens), "members": [i], "anchor": i})
-        else:
-            best["tokens"] = generalize(best["tokens"], tokens)
-            best["members"].append(i)
-
-    # Merge clusters that generalized to the same final template (canonical).
-    by_template: dict[str, dict] = {}
-    for c in clusters:
-        template = " ".join(c["tokens"])
-        merged = by_template.setdefault(template, {"members": [], "anchors": set()})
-        merged["members"].extend(c["members"])
-        merged["anchors"].add(c["anchor"])
-
-    out: list[SigAssignment] = []
-    for template, info in by_template.items():
-        tid = template_id_of(template)
-        for i in info["members"]:
-            out.append(
-                SigAssignment(
-                    sig=sigs[i].sig,
-                    template_id=tid,
-                    template=template,
-                    creates=i in info["anchors"],
-                )
-            )
-    return out
-
-
 def zscore(value: float, mean: float, stddev: float) -> float:
     """(x-μ)/σ with the reference's σ=0→1 guard (cmd/anomaly/main.go:244-246)."""
     return (value - mean) / (stddev if stddev else 1.0)
-
-
-def severity_of(z: float) -> str:
-    """cmd/anomaly/main.go:255-264."""
-    if z > 5:
-        return "critical"
-    if z > 4:
-        return "high"
-    if z > 3:
-        return "medium"
-    return "low"
 
 
 def stddev_pop(values: list[float]) -> float:

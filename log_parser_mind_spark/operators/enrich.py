@@ -42,13 +42,3 @@ def enrich_with_lookup(parsed: DataFrame, lookup: DataFrame) -> DataFrame:
     parsed_turns schema where role is stored as ``source``."""
     dim = F.broadcast(lookup.withColumnRenamed("role", "source"))
     return parsed.join(dim, on=["source", "tool"], how="left")
-
-
-def enrich_with_templates(logs: DataFrame, templates: DataFrame) -> DataFrame:
-    """compressed_logs ⟕ templates ON template_id (001_clickhouse_schema.sql:61)
-    — the J1 broadcast join. Adds the dimension's ``pattern`` (and counts) for
-    rows that carry only a template_id."""
-    dim = F.broadcast(
-        templates.select("template_id", "pattern", F.col("log_count").alias("template_log_count"))
-    )
-    return logs.join(dim, on="template_id", how="left")

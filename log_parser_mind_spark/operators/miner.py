@@ -295,9 +295,7 @@ def _split_giant_leaves(slim: DataFrame, cap: int) -> tuple[DataFrame, DataFrame
     return with_n.filter(in_sample).drop("leaf_n"), with_n.filter(~in_sample).drop("leaf_n")
 
 
-def _assign_tail(
-    tail: DataFrame, clustered: DataFrame, drain: DrainConfig, cache: bool = True
-) -> DataFrame:
+def _assign_tail(tail: DataFrame, clustered: DataFrame, drain: DrainConfig) -> DataFrame:
     """Giant-leaf tail assignment, JVM-side: each unsampled signature joins
     the (broadcast) templates mined from its leaf's sample; token similarity
     = Drain's match fraction with wildcard match (drain.go:345-363) via
@@ -361,11 +359,10 @@ def _assign_tail(
             ).alias("m")
         )
     )
-    if cache:
-        # ``best`` feeds both the matched and the singleton branches below;
-        # caching keeps the tail join single-execution (one row per tail sig,
-        # empty for non-giant corpora).
-        best = best.persist()
+    # ``best`` feeds both the matched and the singleton branches below;
+    # caching keeps the tail join single-execution (one row per tail sig,
+    # empty for non-giant corpora).
+    best = best.persist()
     matched = best.filter(F.col("m").isNotNull()).select(
         "masked_sig",
         F.col("m.template_id").alias("template_id"),
@@ -399,7 +396,6 @@ def _assign_tail(
 def mine_assignments(
     masked: DataFrame,
     config: PipelineConfig | None = None,
-    cache_sig_stats: bool = True,
     seed_templates: DataFrame | None = None,
 ) -> DataFrame:
     """Stages 2+3: masked rows → per-signature template assignments.
@@ -418,9 +414,7 @@ def mine_assignments(
     instead of founding a finer-grained cluster.
     """
     config = config or PipelineConfig()
-    sig_stats = _sig_stats(masked, collect_samples=False, max_depth=config.drain.max_depth)
-    if cache_sig_stats:
-        sig_stats = sig_stats.persist()
+    sig_stats = _sig_stats(masked, collect_samples=False, max_depth=config.drain.max_depth).persist()
     slim = sig_stats.select(*_LEAF_KEYS, "masked_sig", "first_conv", "first_turn")
     seeds = None
     if seed_templates is not None:
@@ -433,20 +427,14 @@ def mine_assignments(
         ).distinct()
         slim = slim.withColumn("is_seed", F.lit(False))
     cap = config.drain.giant_leaf_threshold
-    use_guard = cap is not None
-    if use_guard and cache_sig_stats:
-        # One tiny aggregation job over the (cached) distinct-signature table
-        # decides whether any leaf actually exceeds the cap — the common case
-        # (no giant leaves) then takes the exact path with ZERO extra plan
-        # machinery (measured ~1.7× pipeline overhead when the guard subtree
-        # is built unconditionally). Deterministic: a pure count, independent
-        # of partitioning. With cache_sig_stats=False the check would re-run
-        # the full input scan, so the guarded plan is built unconditionally.
-        max_leaf = (
-            slim.groupBy(*_LEAF_KEYS).count().agg(F.max("count")).collect()[0][0]
-        )
-        use_guard = max_leaf is not None and max_leaf > cap
-    if not use_guard:
+    # One tiny aggregation job over the (cached) distinct-signature table
+    # decides whether any leaf actually exceeds the cap — the common case
+    # (no giant leaves) then takes the exact path with ZERO extra plan
+    # machinery (measured ~1.7× pipeline overhead when the guard subtree
+    # is built unconditionally). Deterministic: a pure count, independent
+    # of partitioning.
+    max_leaf = slim.groupBy(*_LEAF_KEYS).count().agg(F.max("count")).collect()[0][0]
+    if max_leaf is None or max_leaf <= cap:
         grouped = slim if seeds is None else slim.unionByName(seeds)
         clustered = _cluster_leaf_runs(grouped, config.drain.sim_threshold, seeds is not None)
     else:
@@ -455,17 +443,13 @@ def mine_assignments(
             # Seeds always mine with the sample — they are cluster state, and
             # must never be hash-partitioned into the tail.
             sample = sample.unionByName(seeds)
-        clustered = _cluster_leaf_runs(sample, config.drain.sim_threshold, seeds is not None)
-        if cache_sig_stats:
-            # The clustered table feeds BOTH union branches (direct + the
-            # tail-template join); without caching, the Python clustering
-            # stage would execute once per branch (subtrees above a reused
-            # exchange are not deduplicated). One row per sampled signature —
-            # same small scale as sig_stats.
-            clustered = clustered.persist()
-        clustered = clustered.unionByName(
-            _assign_tail(tail, clustered, config.drain, cache=cache_sig_stats)
-        )
+        # The clustered table feeds BOTH union branches (direct + the
+        # tail-template join); without caching, the Python clustering stage
+        # would execute once per branch (subtrees above a reused exchange
+        # are not deduplicated). One row per sampled signature — same small
+        # scale as sig_stats.
+        clustered = _cluster_leaf_runs(sample, config.drain.sim_threshold, seeds is not None).persist()
+        clustered = clustered.unionByName(_assign_tail(tail, clustered, config.drain))
     # Join the stats back onto the tiny clustered table (both sides are one
     # row per distinct signature).
     return clustered.join(
@@ -477,9 +461,7 @@ def mine_assignments(
     ).select("sig_id", *[f.name for f in ASSIGNMENTS.fields])
 
 
-def templates_from_assignments(
-    assignments: DataFrame, examples: DataFrame | None = None
-) -> DataFrame:
+def templates_from_assignments(assignments: DataFrame) -> DataFrame:
     """Templates dimension (drain.go:36-45 / 001_clickhouse_schema.sql:26-34):
     upsert semantics = groupBy(template_id) min/max/sum, replacing the
     reference's ReplacingMergeTree(last_seen)."""

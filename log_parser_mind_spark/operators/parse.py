@@ -159,7 +159,6 @@ def finalize_parsed(
 def parse_pipeline(
     transcripts: DataFrame,
     config: PipelineConfig | None = None,
-    cache_assignments: bool = True,
     include_text: bool = True,
     seed_templates: DataFrame | None = None,
 ):
@@ -175,9 +174,7 @@ def parse_pipeline(
 
     config = config or PipelineConfig()
     masked = masked_transcripts(transcripts, config.drain.max_depth)
-    assignments = mine_assignments(masked, config, seed_templates=seed_templates)
-    if cache_assignments:
-        assignments = assignments.persist()
+    assignments = mine_assignments(masked, config, seed_templates=seed_templates).persist()
     templates = templates_from_assignments(assignments)
     parsed = finalize_parsed(
         assign_templates(masked, assignments, config), config, include_text=include_text

@@ -46,9 +46,3 @@ DEFAULT_ROUTES: list[Route] = [
 
 def with_route(parsed: DataFrame) -> DataFrame:
     return parsed.withColumn("severity_class", severity_class_expr(F.col("template")))
-
-
-def fan_out(parsed: DataFrame, routes: list[Route] | None = None) -> dict[str, DataFrame]:
-    """Route the parsed stream into named sink DataFrames (one shared plan)."""
-    routed = with_route(parsed)
-    return {r.name: routed.filter(F.expr(r.predicate)) for r in (routes or DEFAULT_ROUTES)}

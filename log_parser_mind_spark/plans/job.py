@@ -13,6 +13,7 @@ used by tests, __spark_entry__ and the DuckDB oracle comparisons.
 
 from __future__ import annotations
 
+import functools
 import logging
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -62,6 +63,14 @@ def _downstream_sinks(
     return sinks
 
 
+def _parse_stage(
+    spark: SparkSession, transcripts: DataFrame, config: PipelineConfig
+) -> tuple[DataFrame, DataFrame]:
+    """The shared parse plan: (enriched + routed parsed_turns, templates)."""
+    parsed, templates, _ = parse_pipeline(transcripts, config)
+    return with_route(enrich_with_lookup(parsed, role_tool_lookup(spark))), templates
+
+
 def build_sinks(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -70,8 +79,7 @@ def build_sinks(
 ) -> dict[str, DataFrame]:
     """Build every sink DataFrame lazily from one shared parse plan."""
     config = config or PipelineConfig()
-    parsed, templates, _ = parse_pipeline(transcripts, config)
-    enriched = with_route(enrich_with_lookup(parsed, role_tool_lookup(spark)))
+    enriched, templates = _parse_stage(spark, transcripts, config)
     sinks: dict[str, DataFrame] = {"parsed_turns": enriched, "templates": templates}
     sinks.update(_downstream_sinks(enriched, config, now))
     return sinks
@@ -84,13 +92,13 @@ def run(
     run_id: str = "run_0",
     config: PipelineConfig | None = None,
     now: str | None = None,
-    resume: bool = True,
     namespace: str | None = None,
 ) -> JobResult:
     """Execute the job. With ``root`` set, each sink is committed as a
     snapshot; on re-run with the same run_id, sinks already committed by that
-    run are skipped (resume-from-checkpoint, north rule). ``namespace``
-    selects the Iceberg catalog backend when its runtime is present."""
+    run are skipped (resume-from-checkpoint, north rule), and a new run_id
+    recomputes every sink. ``namespace`` selects the Iceberg catalog backend
+    when its runtime is present."""
     config = config or PipelineConfig()
     if root is None:
         return JobResult(sinks=build_sinks(spark, transcripts, config, now))
@@ -106,7 +114,7 @@ def run(
     # Iceberg: snapshot ids in catalog metadata, where the atomic data commit
     # IS the marker — sources/iceberg.py).
     result = JobResult(sinks={})
-    done = _committed_by_run(store, run_id) if resume else set()
+    done = _committed_by_run(store, run_id)
 
     def commit_stage(name: str, df_fn, sort=None, partition_by=None):
         """Commit one sink unless this run already did. Returns its commit
@@ -130,15 +138,7 @@ def run(
     # Step 1: the expensive parse+mine pass, committed alone; every other
     # sink reads either the committed columnar snapshot (one big scan total,
     # not one per sink) or the assignments its broadcast join cached.
-    parsed_lazy = templates_lazy = None
-
-    def build_parse():
-        nonlocal parsed_lazy, templates_lazy
-        if parsed_lazy is None:
-            p, t, _ = parse_pipeline(transcripts, config)
-            parsed_lazy = with_route(enrich_with_lookup(p, role_tool_lookup(spark)))
-            templates_lazy = t
-        return parsed_lazy, templates_lazy
+    build_parse = functools.cache(functools.partial(_parse_stage, spark, transcripts, config))
 
     # parsed_turns is month-partitioned (001_clickhouse_schema.sql:20
     # PARTITION BY toYYYYMM) so SnapshotStore.expire() can TTL whole month

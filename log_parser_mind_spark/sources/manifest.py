@@ -105,8 +105,8 @@ class SnapshotStore:
         (sink, run_id): a SEQUENTIALLY replayed micro-batch or retried job
         whose commit already landed returns the existing snapshot instead of
         appending a double-counting duplicate (the streaming path opts in).
-        It is opt-in because forced recomputes (resume=False) and repeated
-        TTL passes legitimately reuse run_ids and must commit fresh. It is a
+        It is opt-in because repeated TTL passes legitimately reuse
+        run_ids and must commit fresh. It is a
         read-then-reserve check, so two CONCURRENT committers with the same
         run_id can still both land — the contract is one writer per run_id.
         """

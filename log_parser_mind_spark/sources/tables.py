@@ -10,11 +10,16 @@ that path and the parquet emulation is the in-sandbox default.
 
 from __future__ import annotations
 
+import logging
 import os
+from urllib.parse import urlparse
+from urllib.request import url2pathname
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..schemas import TRANSCRIPTS
+
+log = logging.getLogger(__name__)
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -32,26 +37,19 @@ def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(TRANSCRIPTS).parquet(path)
 
 
-def write_transcripts(
-    df: DataFrame, path: str, n_buckets: int = 32, months_partitioning: bool = True
-) -> None:
+def write_transcripts(df: DataFrame, path: str, n_buckets: int = 32) -> None:
     """Write transcripts the way the 10^12-turn table would be laid out:
     Iceberg ``PARTITIONED BY (months(ts), bucket(N, conv_id))`` emulated as
     hive-style month dir + conv-hash bucket file grouping, with rows
     clustered by (conv_id, turn_idx) inside files."""
     out = df.withColumn("month", F.date_format("ts", "yyyy-MM"))
-    if months_partitioning:
-        (
-            out.repartition(n_buckets, F.col("month"), F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)))
-            .sortWithinPartitions("conv_id", "turn_idx")
-            .write.mode("overwrite")
-            .partitionBy("month")
-            .parquet(path)
-        )
-    else:
-        out.drop("month").repartition(n_buckets, "conv_id").sortWithinPartitions(
-            "conv_id", "turn_idx"
-        ).write.mode("overwrite").parquet(path)
+    (
+        out.repartition(n_buckets, F.col("month"), F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)))
+        .sortWithinPartitions("conv_id", "turn_idx")
+        .write.mode("overwrite")
+        .partitionBy("month")
+        .parquet(path)
+    )
 
 
 def repartition_salted(
@@ -104,15 +102,25 @@ def scan_with_min_parallelism(df: DataFrame, spark: SparkSession, path: str) -> 
     table it spreads. Probing reads parquet footers (local driver
     metadata), never the data. Results are partitioning-independent (the
     suite's N-vs-4N executor invariance), so this is a pure plan-shape
-    change."""
+    change. ``path`` may be a local path or a ``file:`` URI; on any other
+    scheme, or when the probe fails, the scan is returned unchanged and a
+    warning names the path."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     target = spark.sparkContext.defaultParallelism
+    url = urlparse(path)
+    if url.scheme not in ("", "file"):
+        log.warning("scan floor skipped for %s: only local paths are probed", path)
+        return df
+    local = url2pathname(url.path) if url.scheme == "file" else path
     try:
-        if os.path.isfile(path):
-            files = [path]
+        if os.path.isfile(local):
+            files = [local]
         else:
             files = [
                 os.path.join(dp, fn)
-                for dp, _dirs, fns in os.walk(path)
+                for dp, _dirs, fns in os.walk(local)
                 for fn in fns
                 if fn.endswith(".parquet")
             ]
@@ -123,19 +131,13 @@ def scan_with_min_parallelism(df: DataFrame, spark: SparkSession, path: str) -> 
         est_splits = sum(-(-s // max_split) for s in sizes)
         if est_splits >= target:
             return df  # big table: scan already parallel, probe stops here
-        import pyarrow.parquet as pq
-
         rows = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
         if rows == 0 or sum(sizes) / rows < _MIN_PARALLEL_ROW_BYTES:
             return df
-    except Exception:  # metadata probe failure must never break the read path
+    except (OSError, pa.ArrowException) as e:
+        log.warning("scan floor skipped for %s: footer probe failed: %s", path, e)
         return df
     return df.repartition(target)
-
-
-def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = os.path.join(sf_dir, "events.parquet")
-    return scan_with_min_parallelism(spark.read.parquet(path), spark, path)
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

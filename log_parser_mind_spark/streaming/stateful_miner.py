@@ -265,7 +265,6 @@ def parse_stream_stateful(
 def parsed_stream(
     stream: DataFrame,
     config: PipelineConfig | None = None,
-    include_text: bool = True,
 ) -> DataFrame:
     """parse_stream_stateful + the batch finalize stage (variables,
     redaction, sizes, deterministic ids — all stateless JVM expressions, so
@@ -281,7 +280,7 @@ def parsed_stream(
     assigned = parse_stream_stateful(stream, config).withColumn(
         "tokens", tokens_expr(F.col("text"))
     )
-    return finalize_parsed(assigned, config, include_text=include_text)
+    return finalize_parsed(assigned, config)
 
 
 def _combine(pd, partials):

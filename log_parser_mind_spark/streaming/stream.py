@@ -48,15 +48,6 @@ def streaming_error_rates(transcripts: DataFrame, watermark: str = "10 minutes")
     )
 
 
-def streaming_volume_windows(transcripts: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """T7 — sliding 5-minute volume evaluation (1-minute slide)."""
-    return (
-        transcripts.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "5 minutes", "1 minute").alias("w"), F.col("role").alias("source"))
-        .agg(F.count(F.lit(1)).alias("volume"))
-    )
-
-
 def _checkpoint_lineage(root: str, query_name: str, checkpoint_location: str | None) -> tuple[str, str]:
     """Resolve the checkpoint dir and its lineage id (shared by every
     foreachBatch pipeline; ONE implementation so the stale-commit guard
@@ -108,6 +99,35 @@ def _merge_templates(store: SnapshotStore, templates: DataFrame) -> DataFrame:
     )
 
 
+def _commit_epoch(
+    store: SnapshotStore, lineage: str, epoch_id: int, parsed: DataFrame, templates: DataFrame
+) -> None:
+    """Commit one micro-batch to both durable sinks exactly once: the parsed
+    rows as an epoch of ``stream_parsed``, then ``templates`` merged into
+    ``stream_templates``, both under one lineage-scoped run_id so a
+    replayed epoch dedups and a crash cannot leave the sinks inconsistent."""
+    run_id = f"{lineage}_epoch_{epoch_id}"
+    store.commit(
+        parsed,
+        "stream_parsed",
+        run_id=run_id,
+        skip_if_committed=True,
+        # Epochs are APPEND data (read_all = union of all of them);
+        # tagging at commit time lets maintenance refuse keep_last
+        # pruning even if the operator forgets to declare this sink.
+        marker_extra={"append_style": True},
+    )
+    # Templates are a replace-style sink (read() = latest merged state):
+    # a replayed epoch recommitting the same merge is idempotent by
+    # value, and the lineage-scoped run_id dedups sequential replays.
+    store.commit(
+        _merge_templates(store, templates),
+        "stream_templates",
+        run_id=run_id,
+        skip_if_committed=True,
+    )
+
+
 def pin_stream_file_order(input_path: str) -> None:
     """Pin FileStreamSource trigger order to PATH order: the source orders
     files by mtime and a single write stamps every part file identically,
@@ -151,25 +171,7 @@ def incremental_pipeline(
         except FileNotFoundError:
             seed = None
         parsed, templates, _ = parse_pipeline(batch_df, config, seed_templates=seed)
-        store.commit(
-            parsed,
-            "stream_parsed",
-            run_id=f"{lineage}_epoch_{epoch_id}",
-            skip_if_committed=True,
-            # Epochs are APPEND data (read_all = union of all of them);
-            # tagging at commit time lets maintenance refuse keep_last
-            # pruning even if the operator forgets to declare this sink.
-            marker_extra={"append_style": True},
-        )
-        # Templates are a replace-style sink (read() = latest merged state):
-        # a replayed epoch recommitting the same merge is idempotent by
-        # value, and the lineage-scoped run_id dedups sequential replays.
-        store.commit(
-            _merge_templates(store, templates),
-            "stream_templates",
-            run_id=f"{lineage}_epoch_{epoch_id}",
-            skip_if_committed=True,
-        )
+        _commit_epoch(store, lineage, epoch_id, parsed, templates)
 
     return (
         stream.writeStream.outputMode("update")
@@ -212,6 +214,7 @@ def stateful_pipeline(
     Same exact-convergence contract as the underlying operator: trigger
     order aligned with canonical (conv, turn) order and no cross-trigger
     template generalization."""
+    from ..operators.miner import templates_from_assignments
     from .stateful_miner import parsed_stream
 
     config = config or PipelineConfig()
@@ -221,35 +224,17 @@ def stateful_pipeline(
     def process(parsed_batch: DataFrame, epoch_id: int) -> None:
         parsed_batch = parsed_batch.persist()
         try:
-            run_id = f"{lineage}_epoch_{epoch_id}"
-            store.commit(
-                parsed_batch,
-                "stream_parsed",
-                run_id=run_id,
-                skip_if_committed=True,
-                marker_extra={"append_style": True},
-            )
-            templates = (
-                parsed_batch.filter(F.col("template_id").isNotNull())
-                .groupBy("template_id", F.col("template").alias("pattern"))
-                .agg(
-                    F.count(F.lit(1)).alias("log_count"),
-                    F.min("ts").alias("first_seen"),
-                    F.max("ts").alias("last_seen"),
-                )
-                .select(
-                    "template_id", "pattern",
-                    F.split("pattern", " ").alias("tokens"),
-                    "log_count", "first_seen", "last_seen",
-                    F.array().cast("array<string>").alias("sample_logs"),
+            # One assignment row per turn: weight 1, its ts as both bounds.
+            templates = templates_from_assignments(
+                parsed_batch.filter(F.col("template_id").isNotNull()).select(
+                    "template_id",
+                    "template",
+                    F.lit(1).alias("weight"),
+                    F.col("ts").alias("first_seen"),
+                    F.col("ts").alias("last_seen"),
                 )
             )
-            store.commit(
-                _merge_templates(store, templates),
-                "stream_templates",
-                run_id=run_id,
-                skip_if_committed=True,
-            )
+            _commit_epoch(store, lineage, epoch_id, parsed_batch, templates)
         finally:
             parsed_batch.unpersist()
 

@@ -15,6 +15,10 @@ from pyspark.sql import functions as F
 from log_parser_mind_spark.config import DrainConfig, PipelineConfig
 from log_parser_mind_spark.operators.drain_core import template_id_of, template_ids_batch
 from log_parser_mind_spark.operators.miner import (
+    _LEAF_KEYS,
+    _assign_tail,
+    _cluster_leaf_runs,
+    _sig_stats,
     _split_giant_leaves,
     assign_templates,
     mine_assignments,
@@ -129,7 +133,7 @@ def test_tail_assignment_plan_is_broadcast_no_sort_merge(spark):
     signature so one leaf is not one task."""
     texts = [f"login attempt key zzqa{i:06d}x" for i in range(800)]
     masked = masked_transcripts(_transcripts(spark, texts), 4)
-    a = mine_assignments(masked, _cfg(100), cache_sig_stats=False)
+    a = mine_assignments(masked, _cfg(100))
     plan = a._sc._jvm.PythonSQLUtils.explainString(a._jdf.queryExecution(), "formatted")
     # tail→mined-template match and the giant-key semi-join are broadcast
     # (the per-sig stats join-back may statically plan as sort-merge — both
@@ -145,13 +149,25 @@ def test_tail_assignment_plan_is_broadcast_no_sort_merge(spark):
 
 
 def test_guard_disabled_matches_legacy_exact_path(spark):
-    # Below the cap, the guarded path must be byte-identical to the exact
-    # sequential path (sample == whole leaf, tail empty).
-    texts = [f"request completed in {i} ms" for i in range(100)]
+    """With a cap equal to the largest leaf, the guarded composition — split,
+    cluster the sample, union the tail assignment — is row-identical to
+    clustering every signature (sample == whole leaf, tail empty)."""
+    texts = [f"login attempt key zzqa{i:06d}x" for i in range(60)]
+    texts += [f"grp one tk{i}a tk{i}b tk{i}c tk{i}d" for i in range(40)]
+    texts += [f"request completed in {i} ms" for i in range(100)]
     texts += [f"user u{i} logged out cleanly now" for i in range(50)]
-    tr = _transcripts(spark, texts)
-    masked = masked_transcripts(tr, 4)
-    a_guard = mine_assignments(masked, _cfg(100_000)).collect()
-    a_exact = mine_assignments(masked, _cfg(None)).collect()
+    masked = masked_transcripts(_transcripts(spark, texts), 4)
+    slim = _sig_stats(masked, False).select(*_LEAF_KEYS, "masked_sig", "first_conv", "first_turn")
+    drain = DrainConfig()
+    cap = slim.groupBy(*_LEAF_KEYS).count().agg(F.max("count")).collect()[0][0]
+    assert cap == 60
+
+    sample, tail = _split_giant_leaves(slim, cap)
+    clustered = _cluster_leaf_runs(sample, drain.sim_threshold, False)
+    guarded = clustered.unionByName(_assign_tail(tail, clustered, drain)).collect()
+    exact = _cluster_leaf_runs(slim, drain.sim_threshold, False).collect()
+    assert tail.count() == 0
+    assert len(exact) == slim.count() == 60 + 40 + 1 + 50
+    assert any(r.template != r.masked_sig for r in exact)  # something generalized
     key = lambda r: (r.masked_sig, r.template_id, r.template, r.creates)  # noqa: E731
-    assert sorted(map(key, a_guard)) == sorted(map(key, a_exact))
+    assert sorted(map(key, guarded)) == sorted(map(key, exact))

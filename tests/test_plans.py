@@ -87,27 +87,23 @@ def test_miner_python_stage_is_only_on_sig_stats(spark):
     from log_parser_mind_spark.operators.parse import parse_pipeline
     from log_parser_mind_spark.synth import synth_transcripts
 
-    from log_parser_mind_spark.operators.miner import mine_assignments
+    from log_parser_mind_spark.operators.miner import _sig_stats, mine_assignments
     from log_parser_mind_spark.operators.parse import masked_transcripts
 
     masked = masked_transcripts(synth_transcripts(spark, n_convs=5, seed=5), 4)
-    plan = _plan(mine_assignments(masked, cache_sig_stats=False))
-    # formatted explain prints each operator twice (tree line + detail block);
-    # with caching disabled the giant-leaf guard references the clustered
-    # stage from three branches (union + tail matched + tail singleton), so
-    # the node may print up to 3×2 times, plus 1×2 for the tail-singleton
-    # MapInArrow. With the default cache_sig_stats the clustered + tail
-    # tables are persisted and execute once. (r6: the clusterer is a
-    # MapInArrow pass over leaf-sorted partitions, one Python call per
-    # Arrow batch instead of one per leaf group.)
-    assert 2 <= plan.count("MapInArrow") <= 8
-    # The pandas stage consumes an aggregate (distinct sigs), not the scan:
-    # the miner plan must contain the signature aggregation.
-    assert any(m in plan for m in ("HashAggregate", "ObjectHashAggregate", "SortAggregate"))
+    plan = _plan(mine_assignments(masked))
+    # formatted explain prints each operator twice (tree line + detail block):
+    # no leaf here is over the giant-leaf cap, so the one Python stage is the
+    # clusterer — a MapInArrow pass over leaf-sorted partitions, one Python
+    # call per Arrow batch instead of one per leaf group.
+    assert plan.count("MapInArrow") == 2
+    # The Python stage consumes an aggregate (distinct sigs), not the scan:
+    # the signature table that feeds the clusterer (cached inside the miner
+    # plan above) must be the signature aggregation.
+    sig_plan = _plan(_sig_stats(masked, False))
+    assert any(m in sig_plan for m in ("HashAggregate", "ObjectHashAggregate", "SortAggregate"))
     # No row-level Python anywhere in the full parsed plan.
-    parsed, _, _ = parse_pipeline(
-        synth_transcripts(spark, n_convs=5, seed=5), cache_assignments=False
-    )
+    parsed, _, _ = parse_pipeline(synth_transcripts(spark, n_convs=5, seed=5))
     full = _plan(parsed)
     assert "BatchEvalPython" not in full and "ArrowEvalPython" not in full
 
@@ -311,3 +307,27 @@ def test_corpus_diff_text_never_rides_the_join(spark, tmp_path):
     assert blocks, plan
     for b in blocks:
         assert "text" not in b, b
+
+
+def test_scan_floor_applies_to_file_uri(spark, tmp_path):
+    """A one-row-group wide table read through a ``file://`` directory gets
+    the scan-parallelism floor, exactly like the same table read by its
+    plain local path."""
+    import hashlib
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from log_parser_mind_spark.sources.tables import read_table
+
+    text = ["".join(hashlib.sha256(f"{i}:{j}".encode()).hexdigest() for j in range(4)) for i in range(256)]
+    (tmp_path / "wide.parquet").mkdir()
+    pq.write_table(
+        pa.table({"doc_id": list(range(256)), "text": text}),
+        str(tmp_path / "wide.parquet" / "part-00000.parquet"),
+    )
+    target = spark.sparkContext.defaultParallelism
+    assert target > 1
+    for sf_dir in (str(tmp_path), tmp_path.as_uri()):
+        df = read_table(spark, sf_dir, "wide")
+        assert df.rdd.getNumPartitions() == target, sf_dir
