@@ -19,18 +19,16 @@ class DrainConfig:
     """Drain template-mining knobs (reference drain.go:66-74 defaults).
 
     ``max_depth`` and ``sim_threshold`` drive both the literal port
-    (drain_core.DrainTree) and the distributed miner. ``max_children`` /
-    ``max_clusters`` are carried for parity: DrainTree stores them and —
-    exactly like the reference (drain.go:313-342 has no cap check) — never
-    limits tree growth with them. The reference's ``MaxSampleLogs`` has no
-    field: its SampleLogs are never populated (drain.go:290).
+    (drain_core.DrainTree) and the distributed miner. The reference's
+    ``MaxChildren`` / ``MaxClusters`` have no field: it never limits tree
+    growth with them (drain.go:313-342 has no cap check). Its
+    ``MaxSampleLogs`` has none either: its SampleLogs are never populated
+    (drain.go:290).
     ``giant_leaf_threshold`` is the distributed miner's scale guard.
     """
 
     max_depth: int = 4
     sim_threshold: float = 0.5
-    max_children: int = 100
-    max_clusters: int = 20
     # Scale guard (no reference analog — the reference's global-mutex tree
     # simply degrades): a tree leaf whose DISTINCT-signature count exceeds
     # this cap is mined on a deterministic hash-sample of ~this many sigs;

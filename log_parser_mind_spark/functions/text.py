@@ -19,24 +19,18 @@ LANG_ORDER = ["en", "es", "fr", "de"]  # deterministic tiebreak precedence
 BPE_ISH_PATTERN = r"[A-Za-z0-9_]+|[^A-Za-z0-9_\s]"
 
 
-def ws_tokens_expr(text: Column) -> Column:
-    """NULL-safe lowercase whitespace tokenizer shared by the scale-path
-    fingerprint ops (dedup.simhash_table, embed.hashing_embedding_table):
-    NULL → empty array, empty tokens dropped. ONE definition so the simhash
-    and embedding passes over the same corpus can never drift apart."""
+def lower_tokens(text: Column) -> Column:
+    """THE lowercase whitespace tokenizer: the text-analytics stage and the
+    fingerprint ops (dedup.simhash_table, embed.hashing_embedding_table)
+    tokenize through this one definition, so passes over one corpus can
+    never drift apart. Empty tokens are dropped. NULL-safe: NULL text
+    tokenizes to the EMPTY array, not NULL — a NULL tokens column poisons
+    downstream scoring (size(NULL) is NULL, and least(NULL/64, 1.0) SKIPS
+    the null, so a NULL doc scored a perfect length term of 1.0 → quality
+    0.7 instead of the floor 0.3)."""
     return F.filter(
         F.split(F.lower(F.coalesce(text, F.lit(""))), r"\s+"), lambda t: t != ""
     )
-
-
-def lower_tokens(text: Column) -> Column:
-    """Alias of ``ws_tokens_expr`` — the text-analytics stage and the
-    fingerprint ops (simhash, hashing embedding) tokenize through ONE
-    definition. NULL-safe: NULL text tokenizes to the EMPTY array, not NULL —
-    a NULL tokens column poisons downstream scoring (size(NULL) is NULL, and
-    least(NULL/64, 1.0) SKIPS the null, so a NULL doc scored a perfect
-    length term of 1.0 → quality 0.7 instead of the floor 0.3)."""
-    return ws_tokens_expr(text)
 
 
 # -- tokens-column variants (the scale path) ---------------------------------

@@ -42,7 +42,6 @@ def curate_corpus(
     minhash_bands: int = 8,
     shingle_n: int = 3,
     min_quality: float = 0.0,
-    langs: tuple[str, ...] | None = None,
     persist_intermediate: bool = True,
     near_dup: str = "jaccard",
     simhash_k: int = 3,
@@ -148,8 +147,6 @@ def curate_corpus(
         .withColumn("n_tokens", F.size("tokens"))
     )
     out = t.filter(F.col("quality") >= min_quality)
-    if langs:
-        out = out.filter(F.col("lang").isin(*langs))
     if model is not None:
         from .classifier import score_logreg, token_bucket_features
 
@@ -224,7 +221,7 @@ def distinct_gram_hashes(
     streaming path threads its event-time column for the watermark)."""
     # tokens in their OWN projection: word_ngrams_expr references the array
     # size + n slices per gram and Catalyst does not CSE the regex-split
-    # chain (functions/text.py:43-48 trap).
+    # chain (functions/text.py:35-40 trap).
     t = df.select(
         F.col(id_col).alias("_id"),
         *[F.col(c) for c in extra_cols],
@@ -440,7 +437,7 @@ def repetition_scores(
       top_3gram_char_frac same for 3-grams
 
     Grams come from the suite's shared lowercase whitespace tokenizer
-    (text.ws_tokens_expr), joined with single spaces. Docs with no lines /
+    (text.lower_tokens), joined with single spaces. Docs with no lines /
     too few tokens score 0 (never NULL). All ratios rounded to 6dp.
 
     Scale shape — the part that matters at 100 TB: every metric is
@@ -458,7 +455,7 @@ def repetition_scores(
     Each derived array is materialized in its OWN projection step
     (withColumn chain) — Catalyst does not CSE higher-order-function trees,
     so referencing an inlined sort/split N times would re-run it N times
-    (the trap documented at functions/text.py:43-48).
+    (the trap documented at functions/text.py:35-40).
     """
     from ..functions import text as tx
 
@@ -504,7 +501,7 @@ def repetition_scores(
                 F.filter(F.split(text, "\n"), lambda l: F.trim(l) != "")
             ),
         )
-        .withColumn("_toks", tx.ws_tokens_expr(F.col(text_col)))
+        .withColumn("_toks", tx.lower_tokens(F.col(text_col)))
         .withColumn("_g2", F.array_sort(tx.word_ngrams_expr(F.col("_toks"), 2)))
         .withColumn("_g3", F.array_sort(tx.word_ngrams_expr(F.col("_toks"), 3)))
     )
@@ -591,7 +588,7 @@ def dedup_paragraphs(
     text = F.coalesce(F.col(text_col), F.lit(""))
     # _norm materialized in its OWN projection: Catalyst does not CSE the
     # regex-normalization chain, and the next step references it twice
-    # (length + hash) — the trap documented at functions/text.py:43-48.
+    # (length + hash) — the trap documented at functions/text.py:35-40.
     keyed = (
         docs.select(
             F.col(id_col).alias("_id"),
@@ -654,10 +651,10 @@ def length_profile(
     groups pass ``exact=False`` for ``percentile_approx`` (t-digest-style
     sketch, mergeable map-side, bounded memory) — same columns, approximate
     values."""
-    from ..functions.text import ws_tokens_expr
+    from ..functions.text import lower_tokens
 
     n_chars = F.length(F.coalesce(F.col(text_col), F.lit("")))
-    n_tokens = F.size(ws_tokens_expr(F.col(text_col)))
+    n_tokens = F.size(lower_tokens(F.col(text_col)))
     pct = F.percentile if exact else (
         lambda c, p: F.percentile_approx(c, p, 10_000)
     )
@@ -690,7 +687,7 @@ def top_ngrams(
     doc set never concentrates in one reducer), then a global
     TakeOrdered(k) — no full sort of the gram table."""
     per_doc = (
-        docs.withColumn("_toks", tx.ws_tokens_expr(F.col(text_col)))
+        docs.withColumn("_toks", tx.lower_tokens(F.col(text_col)))
         .select(
             F.col(id_col).alias("_rid"),
             F.explode(tx.word_ngrams_expr(F.col("_toks"), n)).alias("gram"),
@@ -757,7 +754,7 @@ def dedup_ngram_spans(
     )
     # _norm in its OWN projection: the window builder references it k times
     # per window via slice — Catalyst does not CSE the lower() chain
-    # (functions/text.py:43-48 trap).
+    # (functions/text.py:35-40 trap).
     base = docs.select(F.col(id_col).alias("_id"), raw_expr.alias("_raw")).withColumn(
         "_norm", F.transform(F.col("_raw"), lambda t: F.lower(t))
     )
@@ -852,7 +849,7 @@ def ngram_lm_scores(
 
     Reference analog: none — quality scoring beyond rule ratios is part of
     the training-data suite the brief adds."""
-    from ..functions.text import ws_tokens_expr
+    from ..functions.text import lower_tokens
 
     if ref is None:
         ref = docs
@@ -860,7 +857,7 @@ def ngram_lm_scores(
     def _bigrams(df: DataFrame, with_id: bool) -> DataFrame:
         ids = [F.col(id_col).alias("_id")] if with_id else []
         b = (
-            df.select(*ids, ws_tokens_expr(F.col(text_col)).alias("_t"))
+            df.select(*ids, lower_tokens(F.col(text_col)).alias("_t"))
             .withColumn("_n", F.size(F.col("_t")))
         )
         pairs = F.when(
@@ -883,7 +880,7 @@ def ngram_lm_scores(
     )
     cc = bc.groupBy("ctx").agg(F.sum("_c").alias("_cc"))
     vocab = ref.select(
-        F.explode(ws_tokens_expr(F.col(text_col))).alias("_w")
+        F.explode(lower_tokens(F.col(text_col))).alias("_w")
     ).agg(F.countDistinct("_w").alias("_v"))
     # _v == 0 (token-free ref) would make the smoothed probability 1/0 →
     # IEEE Infinity → nll = -Inf → ppl 0.0: every doc silently scored

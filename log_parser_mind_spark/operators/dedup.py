@@ -21,7 +21,9 @@ All thresholds/seeds are parameters; everything is deterministic.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
+
+from ..functions.text import lower_tokens, word_ngrams_expr
 
 
 def normalized_text(col):
@@ -41,19 +43,18 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def shingles_expr(text_col, n: int = 3):
-    """Word n-gram shingles as an array column (JVM-side).
-
-    Docs with fewer than ``n`` tokens yield an EMPTY array — the guard is
-    load-bearing: ``sequence(1, size-(n-1))`` on a short doc would produce a
-    DESCENDING [1, 0] (Spark auto-steps -1) and ``slice(toks, 0, n)`` then
-    throws INVALID_PARAMETER_VALUE.START, poisoning the whole job on any
-    corpus containing a short or blank document."""
-    toks = F.split(normalized_text(text_col), " ")
-    idx = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    return F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " "))
+def _distinct_shingles(
+    docs: DataFrame, id_col: str, text_col: str, n: int, out_id: str = "id"
+) -> DataFrame:
+    """(out_id, shingle): one row per distinct word n-gram of each doc's
+    normalized text (text.word_ngrams_expr — a doc shorter than ``n``
+    tokens yields no rows). Every shingle-set path (MinHash bands, n-gram
+    Jaccard, the candidate verify) starts from this explode."""
+    toks = F.split(normalized_text(F.col(text_col)), " ")
+    return docs.select(
+        F.col(id_col).alias(out_id),
+        F.explode(F.array_distinct(word_ngrams_expr(toks, n))).alias("shingle"),
+    )
 
 
 def minhash_banded(
@@ -74,10 +75,7 @@ def minhash_banded(
     if k % bands != 0:
         raise ValueError(f"k ({k}) must be divisible by bands ({bands})")
     rows_per_band = k // bands
-    exploded = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(shingles_expr(F.col(text_col), shingle_n))).alias("shingle"),
-    )
+    exploded = _distinct_shingles(docs, id_col, text_col, shingle_n)
     # r6: one server-parsed expression instead of k Column-API chains —
     # the per-seed F.min(F.xxhash64(F.lit(i), ...)) loop cost ~4 py4j
     # round trips per seed of pure DataFrame build time (see simhash_table
@@ -144,10 +142,7 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exact n-gram Jaccard over all pairs (or a candidate pair set from LSH).
     explode → equi-join on shingle → |∩| per pair; |∪| = sa + sb − |∩|."""
-    sh = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(shingles_expr(F.col(text_col), n))).alias("shingle"),
-    )
+    sh = _distinct_shingles(docs, id_col, text_col, n)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_shingles"))
     a, b = sh.alias("a"), sh.alias("b")
     if candidates is not None:
@@ -199,9 +194,7 @@ def simhash_table(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
     parallelism. Docs with no tokens get simhash 0 (all votes empty) and
     n_tokens 0 — downstream pair joins use n_tokens to keep the vacuous
     fingerprint out of hot buckets (see simhash_near_dup_pairs)."""
-    from ..functions.text import ws_tokens_expr
-
-    toks = ws_tokens_expr(F.col(text_col))
+    toks = lower_tokens(F.col(text_col))
     # id keeps its source type: casting to long would NULL every string id
     # (e.g. conv ids) and silently return zero pairs downstream.
     exploded = docs.select(
@@ -242,32 +235,36 @@ def simhash_near_dups(docs: DataFrame, id_col: str = "doc_id", text_col: str = "
     )
 
 
+def _bit_bands(col: str, n_bits: int, bands: int) -> Column:
+    """``band`` = explode of ``bands`` equal-width slices of the low
+    ``n_bits`` of the long column ``col``, one struct(band_idx, band_val)
+    per slice: the band-join key of the simhash and hyperplane-bucket
+    self-joins."""
+    if n_bits % bands != 0:
+        raise ValueError(f"bands ({bands}) must divide the bit width ({n_bits})")
+    width = n_bits // bands
+    mask = F.lit((1 << width) - 1).cast("long")
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band_idx"),
+                    F.shiftrightunsigned(col, b * width).bitwiseAND(mask).alias("band_val"),
+                )
+                for b in range(bands)
+            ]
+        )
+    ).alias("band")
+
+
 def simhash_banded(sh: DataFrame, bands: int) -> DataFrame:
     """Explode a simhash table into (id, simhash, band_idx, band_val) rows —
     the join-key table ``simhash_near_dup_pairs`` self-joins. Public so cost
     evidence (similarity.bucket_stats over ["band_idx", "band_val"]) can be
     computed on the EXACT table the operator joins."""
-    if 64 % bands != 0:
-        raise ValueError(f"bands ({bands}) must divide 64")
-    width = 64 // bands
-    mask = F.lit((1 << width) - 1).cast("long")
-    return sh.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.shiftrightunsigned("simhash", b * width)
-                        .bitwiseAND(mask)
-                        .alias("band_val"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("id", "simhash", "band.band_idx", "band.band_val")
+    return sh.select("id", "simhash", _bit_bands("simhash", 64, bands)).select(
+        "id", "simhash", "band.band_idx", "band.band_val"
+    )
 
 
 def simhash_near_dup_pairs(
@@ -300,8 +297,6 @@ def simhash_near_dup_pairs(
     linear) or ``exact_dups`` instead."""
     if not 0 <= k < bands:
         raise ValueError(f"k ({k}) must satisfy 0 <= k < bands ({bands}) for exact recall")
-    if 64 % bands != 0:
-        raise ValueError(f"bands ({bands}) must divide 64")
     sh = simhash_table(docs, id_col, text_col).filter(F.col("n_tokens") > 0)
     banded = simhash_banded(sh, bands)
     a, b = banded.alias("a"), banded.alias("b")
@@ -369,27 +364,9 @@ def embedding_near_dups(
         seed=seed,
     )
     if bands > 1:
-        if n_planes % bands != 0:
-            raise ValueError(f"bands ({bands}) must divide n_planes ({n_planes})")
-        width = n_planes // bands
-        mask = F.lit((1 << width) - 1).cast("long")
-        b = b.select(
-            id_col,
-            vec_col,
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).alias("band_idx"),
-                            F.shiftrightunsigned("bucket", i * width)
-                            .bitwiseAND(mask)
-                            .alias("band_val"),
-                        )
-                        for i in range(bands)
-                    ]
-                )
-            ).alias("band"),
-        ).select(id_col, vec_col, "band.band_idx", "band.band_val")
+        b = b.select(id_col, vec_col, _bit_bands("bucket", n_planes, bands)).select(
+            id_col, vec_col, "band.band_idx", "band.band_val"
+        )
         join_keys = ["band_idx", "band_val"]
     else:
         join_keys = ["bucket"]
@@ -432,18 +409,14 @@ def _verify_candidate_pairs(
     if small_side not in ("left", "right"):
         raise ValueError(f"small_side must be 'left' or 'right', got {small_side!r}")
 
-    def sh(df, out_id):
-        return df.select(
-            F.col(id_col).alias(out_id),
-            F.explode(
-                F.array_distinct(shingles_expr(F.col(text_col), shingle_n))
-            ).alias("shingle"),
-        )
-
     l_ids = cand.select(left_key).distinct()
     r_ids = cand.select(right_key).distinct()
-    lsh_t = sh(left_docs, left_key).join(F.broadcast(l_ids), left_key, "left_semi")
-    rsh_t = sh(right_docs, right_key).join(F.broadcast(r_ids), right_key, "left_semi")
+    lsh_t = _distinct_shingles(left_docs, id_col, text_col, shingle_n, left_key).join(
+        F.broadcast(l_ids), left_key, "left_semi"
+    )
+    rsh_t = _distinct_shingles(right_docs, id_col, text_col, shingle_n, right_key).join(
+        F.broadcast(r_ids), right_key, "left_semi"
+    )
     inter = (
         lsh_t.join(rsh_t, "shingle")
         .groupBy(left_key, right_key)

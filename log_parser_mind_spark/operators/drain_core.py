@@ -186,8 +186,6 @@ class DrainTree:
         c = config or DrainConfig()
         self.max_depth = c.max_depth or 4
         self.sim_threshold = c.sim_threshold or 0.5
-        self.max_children = c.max_children or 100
-        self.max_clusters = c.max_clusters or 20
         self.root = _Node(0)
         self.clusters: dict[str, LogCluster] = {}
 

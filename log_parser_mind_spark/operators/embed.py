@@ -25,16 +25,9 @@ from __future__ import annotations
 import os
 from typing import Callable, Iterator
 
-from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F, types as T
 
-
-def _tokens(text_col: Column) -> Column:
-    # THE shared scale-path tokenizer (functions/text.ws_tokens_expr) — the
-    # same definition simhash_table uses, so the two fingerprint passes over
-    # one corpus can never drift apart.
-    from ..functions.text import ws_tokens_expr
-
-    return ws_tokens_expr(text_col)
+from ..functions.text import lower_tokens
 
 
 def hashing_embedding_table(
@@ -55,7 +48,7 @@ def hashing_embedding_table(
     h = F.xxhash64(F.lit(seed), F.col("tok"))
     one = F.lit(1).cast("long")
     exploded = docs.select(
-        F.col(id_col).alias("id"), F.explode_outer(_tokens(F.col(text_col))).alias("tok")
+        F.col(id_col).alias("id"), F.explode_outer(lower_tokens(F.col(text_col))).alias("tok")
     ).select(
         "id",
         F.when(F.col("tok").isNotNull(), F.pmod(h, F.lit(dim))).alias("bucket"),
@@ -75,7 +68,7 @@ def hashing_embedding_table(
     # sum-of-squares into each of the 64 array slots is a 64×64 expression
     # blowup that breaks whole-stage codegen (janino method-size limit →
     # interpreted fallback, measured) — the same no-CSE trap documented at
-    # functions/text.py:28-33. CollapseProject keeps a non-cheap alias
+    # functions/text.py:35-40. CollapseProject keeps a non-cheap alias
     # referenced 64×, so the plan computes sqrt once per row.
     norm = F.sqrt(
         sum(F.col(f"b{i}") * F.col(f"b{i}") for i in range(dim)).cast("double")

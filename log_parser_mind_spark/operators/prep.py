@@ -144,7 +144,7 @@ def chunk_documents(
     # Materialize the tokenization in its OWN projection first: Catalyst
     # does not CSE non-cheap expression trees, so referencing the split
     # inline from n / n_chunks / the guard would re-run the regex ~4x per
-    # row (the documented trap at functions/text.py:42-44).
+    # row (the documented trap at functions/text.py:35-40).
     tokd = docs.select(
         F.col(id_col),
         F.filter(
@@ -281,7 +281,7 @@ def sft_examples(
             f"context_budget_tokens must be >= 1, got {context_budget_tokens}"
         )
     budget = F.lit(int(context_budget_tokens)).cast("long")
-    # Tokenization in its OWN projection (the CSE trap at text.py:42-44).
+    # Tokenization in its OWN projection (the CSE trap at text.py:35-40).
     base = turns.select(
         F.col(conv_col).alias("_conv"),
         F.col(order_col).alias("_ord"),
@@ -438,7 +438,7 @@ def _scored_response_candidates(
         "_text",
     )
     # Tokenize in a separate projection from the score (the CSE trap at
-    # text.py:42-44).
+    # text.py:35-40).
     return cand.withColumn("_toks", lower_tokens(F.col("_text"))).withColumn(
         "_score", quality_score_from(F.col("_toks"), F.col("_text"))
     )

@@ -119,7 +119,7 @@ def pack_corpus(
     shard_col="shard", order_col="pos_in_shard")`` packs each shard in its
     shuffled position order ((shard, pos_in_shard) is unique, so the window
     order stays deterministic; ``key_col`` remains the final tie-break)."""
-    from ..functions.text import ws_tokens_expr
+    from ..functions.text import lower_tokens
 
     if budget_tokens < 1:
         raise ValueError(f"budget_tokens must be >= 1, got {budget_tokens}")
@@ -128,7 +128,7 @@ def pack_corpus(
         with_tok = docs
     else:
         with_tok = docs.withColumn(
-            "n_tokens", F.coalesce(F.size(ws_tokens_expr(F.col(text_col))), F.lit(0))
+            "n_tokens", F.coalesce(F.size(lower_tokens(F.col(text_col))), F.lit(0))
         )
     shard = (
         F.col(shard_col).cast("long")
@@ -532,7 +532,7 @@ def dsir_select(
 
     Reference analog: none — part of the training-data suite the brief
     adds."""
-    from ..functions.text import poly_fold_expr, ws_tokens_expr
+    from ..functions.text import lower_tokens, poly_fold_expr
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -544,7 +544,7 @@ def dsir_select(
     def _grams(df: DataFrame, with_id: bool) -> DataFrame:
         ids = [F.col(id_col).alias("_id")] if with_id else []
         b = (
-            df.select(*ids, ws_tokens_expr(F.col(text_col)).alias("_t"))
+            df.select(*ids, lower_tokens(F.col(text_col)).alias("_t"))
             .withColumn("_n", F.size(F.col("_t")))
         )
         bucket_of = lambda i: F.pmod(  # noqa: E731

@@ -24,12 +24,13 @@ module is the REAL path the gate selects when a catalog is configured:
   - read         → ``spark.read.table`` (latest) / time-travel by snapshot-id
                    (superseded states stay queryable until expire_snapshots,
                    the vacuum analog the catalog provides natively).
-  - template upsert (S7 ReplacingMergeTree) → ``MERGE INTO`` on template_id.
-  - TTL expire   → partition-predicate ``DELETE`` on the month partition —
-                   Iceberg drops whole data files by metadata when the
-                   predicate aligns with partitioning, the same no-rewrite
-                   behavior SnapshotStore.expire implements by deleting
-                   month= dirs.
+  - templates    → replaced per run like every other sink: plans/job.run
+                   commits the run's whole dimension (built by
+                   miner.templates_from_assignments), no MERGE.
+  - TTL expire   → ``DELETE`` on the caller's ts column (``expire_ts_sql``)
+                   — Iceberg drops whole data files by metadata where the
+                   predicate aligns with a month(ts) partition transform,
+                   and rewrites only the boundary files otherwise.
 
 Per-partition lineage rows (partition_id >= 0 in the parquet manifest) are
 NOT duplicated into ``_manifest``: Iceberg's own ``.files`` / ``.manifests``
@@ -37,11 +38,11 @@ metadata tables already record per-file record counts natively; the
 ``_manifest`` table carries the stage-level (-1) rows resume consults.
 
 Without the jar the catalog calls fail at analysis time; the unit tests
-exercise the backend DISPATCH, the resume logic (catalog I/O faked at the
+exercise the backend DISPATCH and the resume logic (catalog I/O faked at the
 ``_write_data``/``_snapshots``/``_read_table``/``_append_manifest``/
-``_read_manifest`` seam — everything above that seam runs for real), and the
-generated SQL shapes. Set ``LOGMIND_ICEBERG_NAMESPACE`` against a session
-with a real catalog to run the same tests end-to-end.
+``_read_manifest`` seam — everything above that seam runs for real). With
+an Iceberg runtime on the classpath, ``snapshot_store(..., namespace=)``
+selects this store unmodified.
 """
 
 from __future__ import annotations
@@ -52,26 +53,6 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 
 from .tables import iceberg_available
-
-
-def merge_upsert_sql(table: str, source: str, key_cols: list[str], update_cols: list[str]) -> str:
-    """S7 — the template-upsert MERGE the reference gets from
-    ReplacingMergeTree (001_clickhouse_schema.sql:33): latest row per key
-    wins, new keys insert."""
-    on = " AND ".join(f"t.{k} = s.{k}" for k in key_cols)
-    sets = ", ".join(f"t.{c} = s.{c}" for c in update_cols)
-    return (
-        f"MERGE INTO {table} t USING {source} s ON {on} "
-        f"WHEN MATCHED THEN UPDATE SET {sets} "
-        f"WHEN NOT MATCHED THEN INSERT *"
-    )
-
-
-def expire_months_sql(table: str, cutoff_month: str, month_col: str = "month") -> str:
-    """TTL as a partition-predicate DELETE: aligned with the month partition
-    spec, Iceberg executes this as metadata-only data-file drops (the
-    001_clickhouse_schema.sql:20-22 toYYYYMM + TTL behavior)."""
-    return f"DELETE FROM {table} WHERE {month_col} < '{cutoff_month}'"
 
 
 def expire_ts_sql(table: str, ts_col: str, older_than: str) -> str:
@@ -182,7 +163,6 @@ class IcebergStore:
         df: DataFrame,
         sink: str,
         run_id: str,
-        snapshot: int | None = None,
         sort_within_partitions: list[str] | None = None,
         partition_by: list[str] | None = None,
         marker_extra: dict | None = None,
@@ -227,12 +207,6 @@ class IcebergStore:
 
     def read(self, sink: str, snapshot: int | None = None) -> DataFrame:
         return self._read_table(sink, snapshot)
-
-    def upsert_templates(self, templates: DataFrame, sink: str = "templates") -> None:
-        view = f"_upsert_{sink}"
-        templates.createOrReplaceTempView(view)
-        cols = [c for c in templates.columns if c != "template_id"]
-        self.spark.sql(merge_upsert_sql(self._table(sink), view, ["template_id"], cols))
 
     def expire(self, sink: str, ts_col: str, older_than: str) -> None:
         # Predicate on the CALLER'S ts column, not a hardcoded month column

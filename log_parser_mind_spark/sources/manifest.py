@@ -88,7 +88,6 @@ class SnapshotStore:
         df: DataFrame,
         sink: str,
         run_id: str,
-        snapshot: int | None = None,
         sort_within_partitions: list[str] | None = None,
         partition_by: list[str] | None = None,
         marker_extra: dict | None = None,
@@ -114,23 +113,19 @@ class SnapshotStore:
             for s in self.committed_snapshots(sink):
                 if self._marker(sink, s, default={}).get("run_id") == run_id:
                     return s
-        reserved = snapshot is None
-        if reserved:
-            latest = self.latest_snapshot(sink)
-            snapshot = 0 if latest is None else latest + 1
-            # Reserve the id with an atomic mkdir: two concurrent committers
-            # (a live streaming epoch + a maintenance compact) that both read
-            # the same latest get DIFFERENT snapshot ids instead of the later
-            # writer overwriting the earlier one's committed dir.
-            while True:
-                path = os.path.join(self._sink_dir(sink), f"snapshot={snapshot}")
-                try:
-                    os.makedirs(path)
-                    break
-                except FileExistsError:
-                    snapshot += 1
-        else:
+        latest = self.latest_snapshot(sink)
+        snapshot = 0 if latest is None else latest + 1
+        # Reserve the id with an atomic mkdir: two concurrent committers
+        # (a live streaming epoch + a maintenance compact) that both read
+        # the same latest get DIFFERENT snapshot ids instead of the later
+        # writer overwriting the earlier one's committed dir.
+        while True:
             path = os.path.join(self._sink_dir(sink), f"snapshot={snapshot}")
+            try:
+                os.makedirs(path)
+                break
+            except FileExistsError:
+                snapshot += 1
 
         out = df
         if sort_within_partitions:
@@ -140,7 +135,7 @@ class SnapshotStore:
         # destroy the reservation and reopen the concurrent-id race for the
         # duration of the write. A failed write leaves a marker-less dir the
         # reservation loop skips, so append never sees pre-existing rows.
-        writer = out.write.mode("append" if reserved else "overwrite")
+        writer = out.write.mode("append")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)

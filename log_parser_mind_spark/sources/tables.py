@@ -3,7 +3,7 @@
 The batch source replacing the reference's push ingest (S1-S3) is a
 partitioned columnar read; sinks S4-S7 are snapshot commits (manifest.py).
 When an Iceberg catalog is configured, ``iceberg.snapshot_store`` routes the
-same calls through ``writeTo``/``MERGE INTO`` (iceberg.IcebergStore); the
+same calls through ``writeTo`` (iceberg.IcebergStore); the
 sandbox has no Iceberg jar (SURVEY §7.2), so `iceberg_available()` gates
 that path and the parquet emulation is the in-sandbox default.
 """
@@ -23,12 +23,17 @@ log = logging.getLogger(__name__)
 
 
 def iceberg_available(spark: SparkSession) -> bool:
+    """True iff the Iceberg Spark runtime is on the JVM classpath. A missing
+    class arrives as py4j's wrapped ``ClassNotFoundException``; any other
+    failure is a broken session and propagates."""
+    from py4j.protocol import Py4JJavaError
+
     try:
         spark._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
             "org.apache.iceberg.spark.SparkCatalog"
         )
         return True
-    except Exception:
+    except Py4JJavaError:
         return False
 
 

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import PipelineConfig
-from ..operators.miner import cluster_leaf, leaf_keys_from_sig
+from ..operators.miner import _LEAF_KEYS, cluster_leaf, leaf_keys_from_sig
 from ..operators.parse import masked_transcripts
 
 STATEFUL_OUT_SCHEMA = (
@@ -94,27 +94,17 @@ def mine_templates_stateful(
     def fn(key, pdfs, state):
         seeds = list(state.get[0]) if state.exists else []
         # Fold Arrow chunks into per-signature stats incrementally — each
-        # chunk is reduced (vectorized) before the next arrives, so a hot
-        # template's row volume never accumulates in Python memory.
+        # chunk is reduced (vectorized, one row = weight 1 with its ts as
+        # both bounds) before the next arrives, so a hot template's row
+        # volume never accumulates in Python memory.
         partials = []
         for pdf in pdfs:
             if not len(pdf):
                 continue
-            grp = pdf.groupby("masked_sig")
-            agg = pd.DataFrame(
-                {
-                    "weight": grp.size(),
-                    "first_seen": grp["ts"].min(),
-                    "last_seen": grp["ts"].max(),
-                }
-            ).reset_index()
-            firsts = (
-                pdf.sort_values(["conv_id", "turn_idx"], kind="mergesort")
-                .drop_duplicates("masked_sig", keep="first")[
-                    ["masked_sig", "conv_id", "turn_idx"]
-                ]
+            rows = pdf[["masked_sig", "conv_id", "turn_idx"]].assign(
+                weight=1, first_seen=pdf["ts"], last_seen=pdf["ts"]
             )
-            partials.append(agg.merge(firsts, on="masked_sig"))
+            partials.append(_combine(pd, [rows]))
             if len(partials) > 8:  # keep the carry O(distinct), not O(chunks)
                 partials = [_combine(pd, partials)]
         if not partials:
@@ -147,7 +137,7 @@ def mine_templates_stateful(
             }
         )
 
-    return keyed.groupBy("n_tokens", "k0", "k1").applyInPandasWithState(
+    return keyed.groupBy(*_LEAF_KEYS).applyInPandasWithState(
         fn,
         outputStructType=STATEFUL_OUT_SCHEMA,
         stateStructType=STATEFUL_STATE_SCHEMA,
@@ -253,7 +243,7 @@ def parse_stream_stateful(
         out["is_new"] = is_new
         yield out
 
-    return keyed.groupBy("n_tokens", "k0", "k1").applyInPandasWithState(
+    return keyed.groupBy(*_LEAF_KEYS).applyInPandasWithState(
         fn,
         outputStructType=PARSE_STREAM_OUT_SCHEMA,
         stateStructType=STATEFUL_STATE_SCHEMA,

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import PipelineConfig
+from ..operators.miner import templates_from_assignments
+from ..operators.route import severity_class_expr
 from ..schemas import TRANSCRIPTS
 from ..sources.manifest import SnapshotStore
 
@@ -34,9 +36,7 @@ def stream_transcripts(spark: SparkSession, path: str, max_files: int = 10) -> D
 def streaming_error_rates(transcripts: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """A3/T6 as a streaming windowed aggregate with late-data handling the
     reference lacks (it windows on arrival time, cmd/anomaly/main.go:121)."""
-    sev = F.when(F.col("text").like("%ERROR%"), "error").when(
-        F.col("text").like("%WARN%"), "warn"
-    ).otherwise("info")
+    sev = severity_class_expr(F.col("text"))
     return (
         transcripts.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 minute").alias("minute"), F.col("role").alias("source"))
@@ -79,22 +79,24 @@ def _checkpoint_lineage(root: str, query_name: str, checkpoint_location: str | N
 
 
 def _merge_templates(store: SnapshotStore, templates: DataFrame) -> DataFrame:
-    """Upsert the batch's templates into the committed dimension (U1
-    semantics: groupBy sum/min/max; ReplacingMergeTree analog). Template ids
-    are content hashes, so the merge is idempotent by value."""
+    """Upsert the batch's templates into the committed dimension: prior ∪
+    new, read back as assignment rows (pattern → template, log_count →
+    weight), through the one upsert rule ``miner.templates_from_assignments``
+    (U1 semantics: groupBy sum/min/max; ReplacingMergeTree analog). Every
+    stored row has tokens = split(pattern) and no sample logs, which is what
+    that rule re-derives. Template ids are content hashes, so the merge is
+    idempotent by value."""
     try:
         prior = store.read("stream_templates")
     except FileNotFoundError:
         return templates
-    return (
-        prior.unionByName(templates)
-        .groupBy("template_id", "pattern")
-        .agg(
-            F.first("tokens").alias("tokens"),
-            F.sum("log_count").alias("log_count"),
-            F.min("first_seen").alias("first_seen"),
-            F.max("last_seen").alias("last_seen"),
-            F.first("sample_logs").alias("sample_logs"),
+    return templates_from_assignments(
+        prior.unionByName(templates).select(
+            "template_id",
+            F.col("pattern").alias("template"),
+            F.col("log_count").alias("weight"),
+            "first_seen",
+            "last_seen",
         )
     )
 
@@ -214,7 +216,6 @@ def stateful_pipeline(
     Same exact-convergence contract as the underlying operator: trigger
     order aligned with canonical (conv, turn) order and no cross-trigger
     template generalization."""
-    from ..operators.miner import templates_from_assignments
     from .stateful_miner import parsed_stream
 
     config = config or PipelineConfig()

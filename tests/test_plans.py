@@ -108,6 +108,32 @@ def test_miner_python_stage_is_only_on_sig_stats(spark):
     assert "BatchEvalPython" not in full and "ArrowEvalPython" not in full
 
 
+def test_reseeded_epoch_parse_python_stage_is_only_the_clusterer(spark):
+    """The foreachBatch epoch plan (stream.incremental_pipeline): every epoch
+    runs parse_pipeline with the committed template dimension as seeds. The
+    seeds join the clusterer's input, so its one Python stage must still be
+    the per-Arrow-batch MapInArrow — no grouped-pandas or row-level UDF."""
+    import datetime as dt
+
+    from log_parser_mind_spark.operators.parse import parse_pipeline
+    from log_parser_mind_spark.schemas import TEMPLATES
+    from log_parser_mind_spark.synth import synth_transcripts
+
+    pattern = "ERROR: Timeout after <*> waiting for response from <*>"
+    seed = spark.createDataFrame(
+        [("tmpl_seed", pattern, pattern.split(" "), 3, dt.datetime(2024, 1, 1),
+          dt.datetime(2024, 1, 1), [])],
+        TEMPLATES,
+    )
+    parsed, templates, _ = parse_pipeline(
+        synth_transcripts(spark, n_convs=5, seed=5), seed_templates=seed
+    )
+    for plan in (_plan(parsed), _plan(templates)):
+        assert "MapInArrow" in plan
+        for marker in ("FlatMapGroupsInPandas", "BatchEvalPython", "ArrowEvalPython"):
+            assert marker not in plan
+
+
 def test_cluster_leaf_runs_matches_per_leaf_reference_across_batches(spark):
     """r6 clusterer internals: _cluster_leaf_runs groups CONTIGUOUS leaf
     runs inside one mapInArrow pass; a leaf whose rows span multiple Arrow

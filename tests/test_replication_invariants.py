@@ -140,7 +140,7 @@ def dedup_ngram_spans(c):
     # Replica 0 holds every canonical occurrence, so it equals the ×1 output,
     # and every replica with >= K tokens rebuilds to ''; only the <K-token
     # pass-through docs add mass, (R-1) times.
-    from log_parser_mind_spark.functions.text import ws_tokens_expr
+    from log_parser_mind_spark.functions.text import lower_tokens
     from log_parser_mind_spark.operators.curate import dedup_ngram_spans
 
     k = 8
@@ -148,7 +148,7 @@ def dedup_ngram_spans(c):
     big = dedup_ngram_spans(c.big_docs, k=k).select("doc_id", "text").collect()
     assert sorted(r for r in big if r.doc_id < OFFSET) == sorted(base)
     small_mass = (
-        c.docs.select(ws_tokens_expr(F.col("text")).alias("t"))
+        c.docs.select(lower_tokens(F.col("text")).alias("t"))
         .filter(F.size("t") < k)
         .agg(F.sum(F.length(F.concat_ws(" ", "t"))))
         .first()[0]
