@@ -53,7 +53,10 @@ def curate_corpus(
     min_model_score: float = 0.5,
 ) -> DataFrame:
     """Curated corpus: input columns plus (lang, quality, n_tokens) — and
-    ``model_score`` when a trained model gates the funnel.
+    ``model_score`` when a trained model gates the funnel. The result
+    carries ``.survivors``, the exact-dedup survivors (persisted unless
+    ``persist_intermediate=False``); long-lived sessions unpersist it
+    after consuming the result.
 
     ``model`` = (weights, bias) from ``classifier.train_logreg`` adds a
     FOURTH stage after the heuristic quality gate: hashed-bag features are
@@ -88,21 +91,27 @@ def curate_corpus(
             f"model has {len(model[0])} weights but model_buckets={model_buckets} "
             "— the scoring buckets must match the training buckets"
         )
-    exact_keep = dedup.exact_dedup(docs, id_col, text_col).select(
-        F.col("keep_id").alias(id_col)
-    )
-    # The exact-dedup survivors feed THREE consumers (minhash candidates,
-    # jaccard verify, quality stage) — persist, or one action re-scans the
-    # source and re-runs the dedup aggregation three times. The production
-    # analog at 100 TB is committing a snapshot between stages
-    # (plans/job.run's write-then-aggregate lesson); persist is the
-    # in-memory equivalent for the composed one-shot form. The cache lives
-    # until Spark's LRU evicts it (lazy return → no unpersist point here);
-    # long-lived sessions calling this in a loop should pass
-    # persist_intermediate=False or clearCache() between calls.
-    survivors = docs.join(exact_keep, id_col, "left_semi")
+    exact = dedup.exact_dedup(docs, id_col, text_col)
+    # Two plans over the exact-dedup survivors. Under AQE (session.py)
+    # Spark 4.1 reuses no exchange that has a cached relation beneath it,
+    # so one query should read a persisted frame at most once when
+    # exchanges sit above it. The near-dup branch reads its input ~15 times
+    # in one write, and over the persisted survivors each read re-ran the
+    # shingle explode and MinHash aggregate. It runs instead on ``near``,
+    # an unpersisted plan whose repeated exchanges AQE reuses (curate_docs,
+    # 100 documents: 15 cache reads -> 1, 0 reused exchanges -> 9, 51
+    # Spark jobs -> 26 per write). ``near`` joins on keep_id directly:
+    # spelled like ``survivors``, a docs frame of just (id, text) would
+    # make it the cached plan again. The persisted ``survivors`` feeds only
+    # the drop and the quality gate; without it Catalyst pushes both joins
+    # below read_table's round-robin scan floor, and the same rows are
+    # written as 4 files instead of 1.
+    survivors = docs.join(exact.select(F.col("keep_id").alias(id_col)), id_col, "left_semi")
     if persist_intermediate:
         survivors = survivors.persist()
+    near = docs.select(id_col, text_col).join(
+        exact, F.col(id_col) == F.col("keep_id"), "left_semi"
+    )
 
     # Stage-2 strategy is pluggable — all three emit (id_a < id_b) pairs and
     # share the keep-smallest drop rule, so they swap without changing the
@@ -117,20 +126,20 @@ def curate_corpus(
     #               operators/embed for semantic paraphrases)
     if near_dup == "jaccard":
         cand = dedup.minhash_lsh_candidates(
-            survivors, id_col, text_col, k=minhash_k, bands=minhash_bands, shingle_n=shingle_n
+            near, id_col, text_col, k=minhash_k, bands=minhash_bands, shingle_n=shingle_n
         )
         verified = dedup.ngram_jaccard_pairs(
-            survivors, id_col, text_col,
+            near, id_col, text_col,
             n=shingle_n, threshold=jaccard_threshold, candidates=cand,
         )
     elif near_dup == "simhash":
         verified = dedup.simhash_near_dup_pairs(
-            survivors, id_col, text_col, k=simhash_k, bands=simhash_bands
+            near, id_col, text_col, k=simhash_k, bands=simhash_bands
         )
     elif near_dup == "embedding":
         from .embed import hashing_embedding_table
 
-        emb = hashing_embedding_table(survivors, id_col=id_col, text_col=text_col,
+        emb = hashing_embedding_table(near, id_col=id_col, text_col=text_col,
                                       dim=embedding_dim)
         verified = dedup.embedding_near_dups(
             emb, id_col=id_col, threshold=embedding_threshold, dim=embedding_dim
@@ -138,9 +147,7 @@ def curate_corpus(
     else:  # pragma: no cover — rejected above before any plan is built
         raise AssertionError(near_dup)
     near_dup_drop = verified.select(F.col("id_b").alias(id_col)).distinct()
-    survivors = survivors.join(near_dup_drop, id_col, "left_anti")
-
-    t = tx.with_tokens(survivors, text_col)
+    t = tx.with_tokens(survivors.join(near_dup_drop, id_col, "left_anti"), text_col)
     t = (
         t.withColumn("lang", tx.lang_id_from(F.col("tokens")))
         .withColumn("quality", tx.quality_score_from(F.col("tokens"), F.col(text_col)))
@@ -161,7 +168,9 @@ def curate_corpus(
             id_col, F.col("score").alias("model_score")
         )
         out = out.join(scores, id_col).filter(F.col("model_score") >= min_model_score)
-    return out.drop("tokens")
+    out = out.drop("tokens")
+    out.survivors = survivors  # unpersist handle — see the docstring
+    return out
 
 
 def curation_report(docs: DataFrame, curated: DataFrame, id_col: str = "doc_id") -> DataFrame:

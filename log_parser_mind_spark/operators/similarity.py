@@ -113,14 +113,20 @@ def hyperplane_bucket(
         if corpus_count is None:
             raise ValueError("n_planes=None requires a corpus_count hint")
         n_planes = planes_for_corpus(corpus_count)
-    planes = _hyperplanes(dim, n_planes, seed)
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        h = F.array(*[F.lit(float(x)) for x in plane])
-        bucket = bucket + F.when(dot_expr(F.col(vec_col), h) > 0, F.lit(1 << i)).otherwise(
-            F.lit(0)
-        )
-    return df.withColumn("bucket", bucket)
+    # One server-parsed expression: dim×planes F.lit calls over py4j took
+    # ~1.2 s to build at dim=64 with 12 planes, this takes ~0.15 s. It is
+    # dot_expr spelled in SQL, over DOUBLE literals (`D` suffix: repr
+    # round-trips the float exactly, and a bare `0.1` parses as a decimal),
+    # so the sign test is the same double arithmetic the oracles replicate.
+    vec = "`" + vec_col.replace("`", "``") + "`"
+    bits = " + ".join(
+        f"CASE WHEN aggregate(zip_with({vec}, array("
+        + ", ".join(f"{x!r}D" for x in plane)
+        + "), (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, (acc, v) -> acc + v) > 0"
+        f" THEN {1 << i} ELSE 0 END"
+        for i, plane in enumerate(_hyperplanes(dim, n_planes, seed))
+    )
+    return df.withColumn("bucket", F.expr(f"CAST(0 AS BIGINT) + {bits}"))
 
 
 def lsh_topk(

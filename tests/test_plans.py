@@ -7,7 +7,12 @@
   - aggregates are two-phase (partial_ before the exchange = map-side combine)
   - the mask/parse projection stays inside WholeStageCodegen (no Python in
     the hot path)
+  - the curation funnel's near-dup branch shares its exchanges, asserted on
+    the executed AQE plan read from the SQL status store
 """
+
+import re
+from collections import Counter
 
 import pytest
 
@@ -21,6 +26,17 @@ from log_parser_mind_spark.operators.query import query_logs
 
 def _plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+
+
+def _executed_operators(spark) -> Counter:
+    """Operator counts of the final AQE plan of the last SQL execution, read
+    from the SQL status store. ``explain`` on a plan that has not run shows
+    no query stages and never a ReusedExchange."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    last = store.executionsList(store.executionsCount() - 1, 1).head()
+    # Formatted plans describe each operator once, as "(<id>) <name>".
+    return Counter(re.findall(r"^\(\d+\) (\w+)", last.physicalPlanDescription(), re.M))
 
 
 @pytest.fixture(scope="module")
@@ -205,8 +221,6 @@ def test_cap_per_group_decision_path_is_narrow(spark):
     # The Arrow stage's detail block (formatted explain: "(N) MapInPandas"
     # heading followed by its Input/Arguments lines, blank-line terminated)
     # must list only the 3 narrow decision columns — never the text payload.
-    import re
-
     m = re.search(r"\(\d+\) MapInPandas\n(.*?)(?:\n\n|\Z)", plan, re.S)
     assert m, plan
     assert "text" not in m.group(1), m.group(1)
@@ -217,8 +231,6 @@ def test_sft_examples_single_exchange_all_jvm(spark):
     """The SFT reshape must cost exactly ONE conversation-keyed exchange
     (both window specs share the (conv, order) sort) and stay entirely
     JVM-side — no Python in a per-row reshape over 100 TB of transcripts."""
-    import re
-
     from log_parser_mind_spark.operators.prep import sft_examples
 
     turns = spark.createDataFrame(
@@ -238,8 +250,6 @@ def test_preference_pairs_two_exchanges_map_side_combine(spark):
     a partial min/max-of-struct aggregate BEFORE the second exchange (a hot
     prompt template combines map-side instead of buffering in one window
     task), and zero Python nodes."""
-    import re
-
     from log_parser_mind_spark.operators.prep import preference_pairs
 
     turns = spark.createDataFrame(
@@ -278,8 +288,6 @@ def test_incremental_index_broadcasts_increment_side(spark):
     idx = dedup.build_minhash_index(base, k=8, bands=8, shingle_n=1)
     plan = _plan(dedup.incremental_near_dups(inc, idx, base, k=8, bands=8, shingle_n=1))
     assert "CartesianProduct" not in plan
-    import re
-
     # Formatted explain separates tree lines from detail blocks; the band
     # join's detail block must be a BroadcastHashJoin keyed on band columns.
     blocks = re.findall(r"\(\d+\) BroadcastHashJoin[^\n]*\n(.*?)(?:\n\n|\Z)", plan, re.S)
@@ -296,8 +304,6 @@ def test_budget_selection_corpus_never_globally_sorts(spark):
     window runs inside the scalar pre-pass, and the only Window left is
     the boundary slice's, partitioned by the quality value. The clear
     branch is scan+filter+project: its kept decision is a pure predicate."""
-    import re
-
     from log_parser_mind_spark.operators.sample import select_within_token_budget
 
     docs = spark.createDataFrame(
@@ -317,8 +323,6 @@ def test_corpus_diff_text_never_rides_the_join(spark, tmp_path):
     """corpus_diff's full-outer join must consume pre-hashed 16-byte pairs:
     the exchanges carry (id, hash) only — document text appears in the scan
     but never in an Exchange's input columns."""
-    import re
-
     from log_parser_mind_spark.operators.curate import corpus_diff
 
     p_old, p_new = str(tmp_path / "old"), str(tmp_path / "new")
@@ -357,3 +361,49 @@ def test_scan_floor_applies_to_file_uri(spark, tmp_path):
     for sf_dir in (str(tmp_path), tmp_path.as_uri()):
         df = read_table(spark, sf_dir, "wide")
         assert df.rdd.getNumPartitions() == target, sf_dir
+
+
+def test_curate_near_dup_branch_reuses_exchanges(spark):
+    """curate_corpus reads its persisted survivors once per write; the
+    near-dup branch runs on its own unpersisted plan, whose repeated
+    subtrees AQE shares. Over the persisted survivors, every read ran the
+    shingle explode and MinHash aggregate again (15 cache reads, no reuse).
+    Two-column docs are the case where the branch and the persisted frame
+    could collapse into one plan."""
+    from log_parser_mind_spark.operators.curate import curate_corpus
+
+    rows = [(i, f"doc {i} " + " ".join(f"w{i}_{j}" for j in range(24))) for i in range(30)]
+    rows += [(100 + i, rows[i][1]) for i in range(3)]  # exact copies
+    rows += [(200 + i, rows[i][1] + " tail") for i in range(3, 6)]  # near copies
+    out = curate_corpus(spark.createDataFrame(rows, "doc_id long, text string"))
+    try:
+        out.write.format("noop").mode("overwrite").save()
+        ops = _executed_operators(spark)
+    finally:
+        out.survivors.unpersist()
+    assert ops["TableCacheQueryStage"] == 1, ops
+    assert ops["ReusedExchange"] >= 1, ops
+
+
+def test_aqe_reuses_no_exchange_above_a_cache(spark):
+    """The Spark behaviour the split in curate_corpus works around: under
+    AQE, a groupBy self-join over a persisted frame gets no ReusedExchange,
+    while the same query over the unpersisted frame gets one."""
+    src = spark.range(64).selectExpr("id % 7 AS k")
+
+    def self_join_ops(df):
+        g = df.groupBy("k").count()
+        g.join(g, "k").write.format("noop").mode("overwrite").save()
+        return _executed_operators(spark)
+
+    assert self_join_ops(src)["ReusedExchange"] == 1
+    cached = src.persist()
+    try:
+        ops = self_join_ops(cached)
+    finally:
+        cached.unpersist()
+    assert ops["ReusedExchange"] == 0, (
+        "Spark now reuses exchanges above a cached relation under AQE: "
+        "curate_corpus's separate unpersisted near-dup plan can go, and the "
+        "branch can read the persisted survivors again"
+    )

@@ -655,22 +655,42 @@ def test_curate_near_dup_strategies(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    def ids(**kw):
-        return sorted(
-            r.doc_id for r in curate.curate_corpus(
-                docs, persist_intermediate=False, **kw
-            ).select("doc_id").collect()
-        )
+    def ids(persist=False, **kw):
+        out = curate.curate_corpus(docs, persist_intermediate=persist, **kw)
+        try:
+            return sorted(r.doc_id for r in out.select("doc_id").collect())
+        finally:
+            out.survivors.unpersist()
 
-    assert ids() == ids(near_dup="jaccard") == [0, 2]
+    # The default persists the survivors and runs the near-dup branch on
+    # its own unpersisted plan; each strategy gives the same rows with and
+    # without the persist.
+    assert ids(True) == ids(near_dup="jaccard") == [0, 2]
     # One appended token flips ~6 of 64 bits at this doc length, so widen
     # the dial to hamming<=6 (8 bands keep the pigeonhole guarantee).
     assert ids(near_dup="simhash", simhash_k=6, simhash_bands=8) == [0, 2]
+    assert ids(True, near_dup="simhash", simhash_k=6, simhash_bands=8) == [0, 2]
     assert ids(near_dup="embedding", embedding_threshold=0.9) == [0, 2]
+    assert ids(True, near_dup="embedding", embedding_threshold=0.9) == [0, 2]
     # A lax threshold keeps the near-dup — the strategy dial actually dials.
     assert 1 in ids(near_dup="embedding", embedding_threshold=0.999)
     with pytest.raises(ValueError, match="near_dup"):
         curate.curate_corpus(docs, near_dup="bogus")
+
+
+def test_curate_survivors_unpersist_handle(spark):
+    """curate_corpus returns its persisted exact-dedup survivors as
+    ``.survivors`` so a long-lived session can release the cache."""
+    from pyspark import StorageLevel
+
+    from log_parser_mind_spark.operators import curate
+
+    docs = spark.createDataFrame([(0, "a b c d"), (1, "a b c d")], "doc_id long, text string")
+    out = curate.curate_corpus(docs)
+    assert out.survivors.storageLevel != StorageLevel.NONE
+    out.survivors.unpersist()
+    assert out.survivors.storageLevel == StorageLevel.NONE
+    assert curate.curate_corpus(docs, persist_intermediate=False).survivors.storageLevel == StorageLevel.NONE
 
 
 def test_ivf_topk_degenerate_corpora(spark):
